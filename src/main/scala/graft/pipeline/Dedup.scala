@@ -2,8 +2,10 @@ package graft.pipeline
 
 import graft.arrays.HashRing
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable.ArrayBuffer
+import scala.reflect.runtime.universe.TypeTag
 
 /** §2-C deduplication / corpus-curation family over `documents` /
   * `embeddings`.
@@ -167,60 +169,47 @@ object Dedup {
     * Shared by d2 (which re-ranks by signature agreement) and d7 (which
     * assembles candidate pairs into duplicate groups).
     */
-  def candidatePairs(sig: DataFrame): DataFrame = {
+  def candidatePairs(sig: DataFrame): DataFrame =
+    bandPairs[(Int, Long, Long), (Long, Long)](sig)(
+      (x, y) => x._1 == y._1 && x._2 == y._2, _ => (), (a, b) => (a._3, b._3))
+      .toDF("doc_a", "doc_b")
+      .distinct()
+
+  /** The band builder and bucket pass behind [[candidatePairs]] and
+    * [[scoredCandidatePairs]], so both change together: the rows are
+    * (band, bkey, doc_id) plus the `carry` columns, `check` sees each row
+    * as it enters the kernel, and `pair` forms the output row of a bucket
+    * pair (a, b), a < b.
+    */
+  private def bandPairs[R <: Product : TypeTag, P <: Product : TypeTag](
+      sig: DataFrame, carry: Column*)(
+      sameBucket: (R, R) => Boolean, check: R => Unit, pair: (R, R) => P): Dataset[P] = {
     // band key fingerprinted to u32 before the shuffle: the raw key is a
     // ~40-char concat of 4 signature values, the fingerprint is 8 bytes —
     // the same shuffle-width win as the shingle family (the oracle applies
     // the identical hash, so the negligible collision mass is mirrored;
     // a colliding band pair just becomes one more LSH candidate for the
     // downstream exact verify, which LSH tolerates by construction)
-    val session = sig.sparkSession
-    import session.implicits._
     val bands = sig
       .select(col("doc_id"), explode(array((0 until Bands).map(lit(_)): _*)).as("band"), col("sigs"))
       .withColumn("bkey", graft.functions.GenKey(concat_ws(",",
         (1 to NumPerm / Bands).map(r => element_at(col("sigs"), col("band") * (NumPerm / Bands) + r)): _*)))
-      .select(col("band"), col("bkey"), col("doc_id"))
+      .select(col("band") +: col("bkey") +: col("doc_id") +: carry: _*)
     // ONE shuffle, by the bucket key, feeding a streaming one-group-at-a-
     // time kernel (d4's shape, replacing the former band self-join): doc
     // ids are distinct within a (band, bkey) group (one row per doc per
     // band) and arrive ascending, so the group's first id is its min. At
-    // most MaxBandDf ids are ever buffered; a group that exceeds the cap
+    // most MaxBandDf rows are ever buffered; a group that exceeds the cap
     // switches to star emission and streams its tail one row at a time —
     // a 10⁶-copy bucket emits 10⁶-1 rows with O(cap) memory, never 10¹².
     bands
       .repartition(col("band"), col("bkey"))
       .sortWithinPartitions("band", "bkey", "doc_id")
-      .as[(Int, Long, Long)]
+      .as(Encoders.product[R])
       .mapPartitions { it =>
-        val buf = it.buffered
-        Iterator.continually {
-          if (!buf.hasNext) None
-          else {
-            val (band0, key0, anchor) = buf.next()
-            def inGroup = buf.hasNext && buf.head._1 == band0 && buf.head._2 == key0
-            val docs = scala.collection.mutable.ArrayBuffer(anchor)
-            while (docs.length < MaxBandDf && inGroup) docs += buf.next()._3
-            Some(if (!inGroup) {
-              // whole group fit under the cap: exact all-pairs (a < b by
-              // the sort order)
-              docs.indices.iterator.flatMap(i =>
-                (i + 1 until docs.length).iterator.map(j => (docs(i), docs(j))))
-            } else {
-              // over cap: anchor-star over the buffered members, then the
-              // lazily-consumed tail (flatMap drains this iterator before
-              // the outer continually forms the next group)
-              docs.iterator.drop(1).map(d => (anchor, d)) ++
-                new Iterator[(Long, Long)] {
-                  def hasNext: Boolean = inGroup
-                  def next(): (Long, Long) = (anchor, buf.next()._3)
-                }
-            })
-          }
-        }.takeWhile(_.isDefined).flatMap(_.get)
-      }
-      .toDF("doc_a", "doc_b")
-      .distinct()
+        SortedGroups.runs(it.map { r => check(r); r })(sameBucket)
+          .flatMap(SortedGroups.pairsOrStar(_, MaxBandDf)(pair))
+      }(Encoders.product[P])
   }
 
   /** The pairs CTE chain shared by d2/d7/d10 oracles (needs shingles+sigs);
@@ -263,58 +252,31 @@ object Dedup {
     * of the (unordered) pair — both sides' sigs are in hand — so the
     * distinct over (doc_a, doc_b, n_match) dedupes multi-band hits
     * exactly as the old distinct over (doc_a, doc_b) did. Buffered state
-    * stays O(MaxBandDf) rows, now MaxBandDf × 16 longs.
+    * stays O(MaxBandDf) rows, now MaxBandDf × 16 longs. Each row's sigs
+    * must hold exactly NumPerm values (the signature-length contract);
+    * the kernel checks it as the row enters and names the offending doc.
     */
-  private[graft] def scoredCandidatePairs(sig: DataFrame): DataFrame = {
-    val session = sig.sparkSession
-    import session.implicits._
-    val bands = sig
-      .select(col("doc_id"), explode(array((0 until Bands).map(lit(_)): _*)).as("band"), col("sigs"))
-      .withColumn("bkey", graft.functions.GenKey(concat_ws(",",
-        (1 to NumPerm / Bands).map(r => element_at(col("sigs"), col("band") * (NumPerm / Bands) + r)): _*)))
-      .select(col("band"), col("bkey"), col("doc_id"), col("sigs"))
-    bands
-      .repartition(col("band"), col("bkey"))
-      .sortWithinPartitions("band", "bkey", "doc_id")
-      .as[(Int, Long, Long, Seq[Long])]
-      .mapPartitions { it =>
-        val buf = it.buffered
-        // exact per-position agreement count — the kernel mirror of the
-        // old zip_with(sigs_a, sigs_b, _ === _) filter-size epilogue (and
-        // of the oracle's list_filter(range, i -> sa[i] = sb[i]) length)
-        def nMatch(x: Seq[Long], y: Seq[Long]): Long = {
-          var i = 0; var c = 0L
-          while (i < NumPerm) { if (x(i) == y(i)) c += 1L; i += 1 }
-          c
-        }
-        Iterator.continually {
-          if (!buf.hasNext) None
-          else {
-            val (band0, key0, anchor, asig) = buf.next()
-            def inGroup = buf.hasNext && buf.head._1 == band0 && buf.head._2 == key0
-            val docs = scala.collection.mutable.ArrayBuffer((anchor, asig))
-            while (docs.length < MaxBandDf && inGroup) {
-              val r = buf.next(); docs += ((r._3, r._4))
-            }
-            Some(if (!inGroup) {
-              docs.indices.iterator.flatMap(i =>
-                (i + 1 until docs.length).iterator.map { j =>
-                  (docs(i)._1, docs(j)._1, nMatch(docs(i)._2, docs(j)._2))
-                })
-            } else {
-              docs.iterator.drop(1).map { case (d, dsig) => (anchor, d, nMatch(asig, dsig)) } ++
-                new Iterator[(Long, Long, Long)] {
-                  def hasNext: Boolean = inGroup
-                  def next(): (Long, Long, Long) = {
-                    val r = buf.next(); (anchor, r._3, nMatch(asig, r._4))
-                  }
-                }
-            })
-          }
-        }.takeWhile(_.isDefined).flatMap(_.get)
-      }
+  private[graft] def scoredCandidatePairs(sig: DataFrame): DataFrame =
+    bandPairs[(Int, Long, Long, Seq[Long]), (Long, Long, Long)](sig, col("sigs"))(
+      (x, y) => x._1 == y._1 && x._2 == y._2,
+      r => require(r._4.length == NumPerm,
+        s"minhash signature length ${r._4.length} != $NumPerm (doc_id=${r._3})"),
+      (a, b) => (a._3, b._3, nMatch(a._4, b._4)))
       .toDF("doc_a", "doc_b", "n_match")
       .distinct()
+
+  /** Exact per-position agreement count — the kernel mirror of the old
+    * zip_with(sigs_a, sigs_b, _ === _) filter-size epilogue (and of the
+    * oracle's list_filter(range, i -> sa[i] = sb[i]) length). Walks both
+    * sides in step: the Dataset decoder hands sigs over as a List, where
+    * indexing each position would rescan from the head; the kernel's
+    * length check makes both sides NumPerm long.
+    */
+  private def nMatch(x: Seq[Long], y: Seq[Long]): Long = {
+    val xs = x.iterator; val ys = y.iterator
+    var c = 0L
+    while (xs.hasNext) if (xs.next() == ys.next()) c += 1L
+    c
   }
 
   def d2MinhashLsh(s: SparkSession, dir: String): DataFrame =
@@ -428,28 +390,16 @@ object Dedup {
       .sortWithinPartitions("h", "doc_id")
       .as[(Long, Long)]
       .mapPartitions { it =>
-        val buf = it.buffered
-        Iterator.continually {
-          if (!buf.hasNext) None
-          else {
-            val h0 = buf.head._1
-            val docs = scala.collection.mutable.ArrayBuffer.empty[Long]
-            var over = false
-            while (buf.hasNext && buf.head._1 == h0) {
-              val d = buf.next()._2
-              // sorted input: distinct = run-length; the cap+1-th
-              // distinct id marks the group viral and frees its buffer
-              if (!over && (docs.isEmpty || docs.last != d)) {
-                if (docs.length >= MaxShingleDf) { over = true; docs.clear() }
-                else docs += d
-              }
-            }
-            Some(if (over) Iterator.empty
-            else docs.iterator.map(d => (1, d, 0L)) ++
-              docs.indices.iterator.flatMap(i =>
-                (i + 1 until docs.length).iterator.map(j => (0, docs(i), docs(j)))))
-          }
-        }.takeWhile(_.isDefined).flatMap(_.get)
+        SortedGroups.runs(it)(_._1 == _._1).flatMap { grp =>
+          // sorted input: distinct doc ids = the first row of each id run;
+          // the cap+1-th distinct id marks the group viral and drops it,
+          // its tail skipped unread
+          val ids = SortedGroups.runs(grp)(_._2 == _._2).map(_.next()._2)
+          val (docs, over) = SortedGroups.capped(ids, MaxShingleDf)
+          if (over) Iterator.empty
+          else docs.iterator.map(d => (1, d, 0L)) ++
+            SortedGroups.pairs(docs)((a, b) => (0, a, b))
+        }
       }
       .toDF("kind", "a", "b")
     // Pair intersections AND per-doc sizes off ONE exchange keyed by `a`
@@ -474,35 +424,18 @@ object Dedup {
         pairShufflePartitions(s, dir), col("a"))
       .sortWithinPartitions(col("a"), col("kind").desc, col("b"))
       .mapPartitions { it =>
-        val buf = it.buffered
-        Iterator.continually {
-          if (!buf.hasNext) None
-          else {
-            val a0 = buf.head._2
-            var na = 0L
-            while (buf.hasNext && buf.head._2 == a0 && buf.head._1 == 1) {
-              buf.next(); na += 1
-            }
-            val nna = na
-            // size row first (one per doc with sizes), then the doc's
-            // (a,b) runs lazily — flatMap consumes each group fully
-            // before continually pulls the next, so state stays O(1)
-            val sizeRow =
-              if (nna > 0) Iterator.single((1, a0, 0L, 0L, nna))
-              else Iterator.empty
-            Some(sizeRow ++ new Iterator[(Int, Long, Long, Long, Long)] {
-              def hasNext: Boolean = buf.hasNext && buf.head._2 == a0
-              def next(): (Int, Long, Long, Long, Long) = {
-                val b0 = buf.head._3
-                var c = 0L
-                while (buf.hasNext && buf.head._2 == a0 && buf.head._3 == b0) {
-                  buf.next(); c += 1
-                }
-                (0, a0, b0, c, nna)
-              }
-            })
+        SortedGroups.runs(it)(_._2 == _._2).flatMap { grp =>
+          // one row per (kind, b) run of the doc, counted as it streams —
+          // state stays O(1). Its size run (kind=1, b=0) sorts first, so
+          // na is known before any of its (a,b) runs is counted.
+          var na = 0L
+          SortedGroups.runs(grp)((x, y) => x._1 == y._1 && x._3 == y._3).map { run =>
+            val (kind, a, b) = run.next()
+            val n = run.length + 1L
+            if (kind == 1) na = n
+            (kind, a, b, if (kind == 1) 0L else n, na)
           }
-        }.takeWhile(_.isDefined).flatMap(_.get)
+        }
       }
       .toDF("kind", "a", "b", "inter", "na")
     val pairsNa = staged.filter(col("kind") === 0)
@@ -1020,41 +953,23 @@ object Dedup {
     repartitionSized(exploded, sized, col("tbl"), col("bkt"))
       .sortWithinPartitions("tbl", "bkt", "vec_id")
       .mapPartitions { it =>
-        val buf = it.buffered
         // one (tbl, bkt) group at a time; vec_id-sorted, so id_a < id_b
-        Iterator.continually {
-          if (!buf.hasNext) None
-          else {
-            val (t0, b0, _, _, _) = buf.head
-            val grp = scala.collection.mutable.ArrayBuffer
-              .empty[(Long, Array[Float], Double)]
-            while (buf.hasNext && buf.head._1 == t0 && buf.head._2 == b0) {
-              val r = buf.next(); grp += ((r._3, r._4, r._5))
-            }
-            Some(grp)
-          }
-        }.takeWhile(_.isDefined).flatMap { g =>
-          val grp = g.get
-          grp.indices.iterator.flatMap { i =>
-            // banded verify: only the bandW positions after i (see the
-            // EmbBandW scaladoc — exact for |bucket| <= W+1, linear on
-            // cluster-skew tails); long arithmetic so an effectively-
-            // infinite width (BandRecall's exact arm) cannot overflow.
-            // Each float widens at the multiply — (double)a * (double)b
-            // over float-valued doubles is the bit-identical product the
-            // all-double kernel computed, and the accumulation order is
-            // unchanged (left-to-right from 0.0, the oracle's fold).
-            (i + 1 until math.min(i.toLong + 1L + bandW, grp.length.toLong).toInt).iterator.flatMap { j =>
-              val (ia, ea, na) = grp(i)
-              val (ib, eb, nb) = grp(j)
-              var acc = 0.0
-              var d = 0
-              while (d < ea.length) { acc += ea(d).toDouble * eb(d).toDouble; d += 1 }
-              val cos = acc / (na * nb)
-              if (cos >= 0.45) Iterator.single((ia, ib, cos))
-              else Iterator.empty
-            }
-          }
+        SortedGroups.runs(it)((x, y) => x._1 == y._1 && x._2 == y._2).flatMap { run =>
+          val grp = ArrayBuffer.from(run.map(r => (r._3, r._4, r._5)))
+          // banded verify: only the bandW positions after i (see the
+          // EmbBandW scaladoc — exact for |bucket| <= W+1, linear on
+          // cluster-skew tails); SortedGroups.pairs bounds the band in
+          // longs, so BandRecall's effectively-infinite width cannot
+          // overflow. Each float widens at the multiply — (double)a *
+          // (double)b over float-valued doubles is the bit-identical
+          // product the all-double kernel computed, and the accumulation
+          // order is unchanged (left-to-right from 0.0, the oracle's fold).
+          SortedGroups.pairs(grp, bandW) { case ((ia, ea, na), (ib, eb, nb)) =>
+            var acc = 0.0
+            var d = 0
+            while (d < ea.length) { acc += ea(d).toDouble * eb(d).toDouble; d += 1 }
+            (ia, ib, acc / (na * nb))
+          }.filter(_._3 >= 0.45)
         }
       }
       .toDF("id_a", "id_b", "cosine")

@@ -156,6 +156,54 @@ class PipelineSpec extends SparkSpec {
       s"every other member agrees on band 0 only: $scores")
   }
 
+  /** Messages along a failure's cause chain (a task failure wraps the
+    * kernel's exception in the driver-side SparkException).
+    */
+  private def failureMessages(run: => Any): List[String] = {
+    val e = intercept[Exception](run)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toList
+  }
+
+  private def contractMessage(len: Int, doc: Long): String =
+    s"minhash signature length $len != ${Dedup.NumPerm} (doc_id=$doc)"
+
+  test("scoredCandidatePairs: a signature shorter than NumPerm fails naming its doc_id") {
+    // Signature-length contract: the kernel scores pairs position by
+    // position up to NumPerm, so a short sigs array must be rejected as
+    // its row enters the kernel, with the offending doc named — not die
+    // as a bare index error on whichever pair first reaches it. With
+    // ANSI mode on (the session default) the band key's element_at
+    // already rejects a short array before the exchange, so the kernel
+    // check is exercised on a non-ANSI session, where that key tolerates
+    // it and the row reaches the kernel.
+    val lenient = spark.newSession()
+    lenient.conf.set("spark.sql.ansi.enabled", "false")
+    import lenient.implicits._
+    val full = Seq.fill(Dedup.NumPerm)(5L)
+    val sig = Seq((0L, full), (1L, full), (2L, full.take(Dedup.NumPerm - 1)))
+      .toDF("doc_id", "sigs")
+    val msgs = failureMessages(Dedup.scoredCandidatePairs(sig).collect())
+    assert(msgs.exists(_.contains(contractMessage(Dedup.NumPerm - 1, 2L))),
+      s"expected the signature-length contract to name doc 2, got: ${msgs.headOption}")
+    // the default (ANSI) session rejects it too, before the kernel
+    val strict = spark.createDataFrame(Seq((0L, full), (2L, full.take(Dedup.NumPerm - 1))))
+      .toDF("doc_id", "sigs")
+    intercept[Exception](Dedup.scoredCandidatePairs(strict).collect())
+  }
+
+  test("scoredCandidatePairs: a signature longer than NumPerm fails naming its doc_id") {
+    // A long array passes the band key (it reads positions 1..NumPerm
+    // only) and would be scored on its first NumPerm values; the kernel
+    // rejects it instead.
+    import spark.implicits._
+    val full = Seq.fill(Dedup.NumPerm)(5L)
+    val sig = Seq((0L, full), (1L, full :+ 5L)).toDF("doc_id", "sigs")
+    val msgs = failureMessages(Dedup.scoredCandidatePairs(sig).collect())
+    assert(msgs.exists(_.contains(contractMessage(Dedup.NumPerm + 1, 1L))),
+      s"expected the signature-length contract to name doc 1, got: ${msgs.headOption}")
+  }
+
   test("d10 purge agrees with d7's groups: dropped = non-keeper members") {
     val dropped = Dedup.d7DupGroups(spark, sf)
       .filter(col("doc_id") =!= col("group_id")).count()

@@ -1,7 +1,8 @@
 #!/bin/bash
 # Round-15 Phase V+C: HEAD-stamped tier dumps, then the DuckDB gates.
-# Same split/budget layout as phaseVC_r14.sh (whose artifacts were lost
-# to the /tmp wipe — round-14 verdict item 3): d5's tier320 oracle is
+# Same split/budget layout as the round-14 Phase VC script (whose
+# artifacts were lost to the /tmp wipe — round-14 verdict item 3): d5's
+# tier320 oracle is
 # the long pole, so its dump goes first and its check starts the moment
 # the dump exists; tier160 follows. check.py writes incrementally
 # (round-14 hardening), so a partial run still leaves per-op evidence.

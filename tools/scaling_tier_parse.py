@@ -14,7 +14,7 @@ def parse(path):
         if m:
             out[m.group(1)] = {
                 "rows": int(m.group(2)),
-                "times": [float(x) for x in m.group(3).split(", ")],
+                "times": [float(x) for x in re.split(r",\s*", m.group(3))],
                 "min": float(m.group(4)),
                 "load1": float(m.group(5)),
             }
@@ -28,10 +28,17 @@ def main(log32, log8, outpath):
                                 capture_output=True, text=True).stdout.strip())
     ops = {}
     for k in sorted(set(a) & set(b)):
+        # a 0.0 32-core min (sub-resolution op) has no meaningful ratio
+        if a[k]["min"] > 0:
+            ratio = round(b[k]["min"] / a[k]["min"], 2)
+        else:
+            ratio = None
+            print(f"{k}: 32-core min is 0, ratio_8v32 written as null",
+                  file=sys.stderr)
         ops[k] = {
             "t32_min": a[k]["min"], "t8_min": b[k]["min"],
             "t32_runs": a[k]["times"], "t8_runs": b[k]["times"],
-            "ratio_8v32": round(b[k]["min"] / a[k]["min"], 2),
+            "ratio_8v32": ratio,
             "rows": a[k]["rows"],
             "rows_match": a[k]["rows"] == b[k]["rows"],
         }
