@@ -41,8 +41,9 @@ object GraftSession {
       // codec startup, small enough that a single slice-read task fits
       // comfortably in executor memory with room for the patch CASE-WHEN.
       .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
-      // Dynamic partition overwrite: ArrayStore.patchPartition must only
-      // replace the partitions it writes, never truncate the table.
+      // Dynamic partition overwrite: a partitioned overwrite replaces only
+      // the partitions it writes, never truncates the table
+      // (ArrayStore.patchPartition also sets this on its own write).
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       // graft_gen_key / graft_ring_place available to pure-SQL users.
       .config("spark.sql.extensions", classOf[functions.GraftExtensions].getName)

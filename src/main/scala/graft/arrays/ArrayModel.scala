@@ -70,9 +70,7 @@ object ArrayModel {
       p
     })
     }
-    // explicit schema: an all-empty source writes no partition directories,
-    // and schema inference on an empty store would fail
-    s.read.schema(storedSchema).parquet(path)
+    graft.sources.ArrayStore.open(s, path)
       .select("coll", "array_id", "i0", "i1", "value")
   }
 
@@ -86,14 +84,6 @@ object ArrayModel {
   private def lockFor(key: String): Object = {
     val fresh = new Object
     keyLocks.putIfAbsent(key, fresh).getOrElse(fresh)
-  }
-
-  private val storedSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("i0", LongType), StructField("i1", LongType),
-      StructField("value", DoubleType),
-      StructField("coll", StringType), StructField("array_id", StringType)))
   }
 
   /** cells as a bucketed session table: partitioned by (coll, array_id)

@@ -171,19 +171,26 @@ object Dedup {
     */
   def candidatePairs(sig: DataFrame): DataFrame =
     bandPairs[(Int, Long, Long), (Long, Long)](sig)(
-      (x, y) => x._1 == y._1 && x._2 == y._2, _ => (), (a, b) => (a._3, b._3))
+      (x, y) => x._1 == y._1 && x._2 == y._2, (a, b) => (a._3, b._3))
       .toDF("doc_a", "doc_b")
       .distinct()
 
   /** The band builder and bucket pass behind [[candidatePairs]] and
     * [[scoredCandidatePairs]], so both change together: the rows are
-    * (band, bkey, doc_id) plus the `carry` columns, `check` sees each row
-    * as it enters the kernel, and `pair` forms the output row of a bucket
-    * pair (a, b), a < b.
+    * (band, bkey, doc_id) plus the `carry` columns, and `pair` forms the
+    * output row of a bucket pair (a, b), a < b. Every signature must hold
+    * exactly NumPerm values (the signature-length contract): the
+    * projection before the band explode checks it once per doc and names
+    * the offending doc_id, before any band key indexes into the array —
+    * so a short signature is not an anonymous index error and a long one
+    * is not silently banded on its first NumPerm values.
     */
   private def bandPairs[R <: Product : TypeTag, P <: Product : TypeTag](
       sig: DataFrame, carry: Column*)(
-      sameBucket: (R, R) => Boolean, check: R => Unit, pair: (R, R) => P): Dataset[P] = {
+      sameBucket: (R, R) => Boolean, pair: (R, R) => P): Dataset[P] = {
+    val checked = when(size(col("sigs")) === NumPerm, col("sigs")).otherwise(raise_error(
+      format_string(s"minhash signature length %s != $NumPerm (doc_id=%s)",
+        size(col("sigs")), col("doc_id"))))
     // band key fingerprinted to u32 before the shuffle: the raw key is a
     // ~40-char concat of 4 signature values, the fingerprint is 8 bytes —
     // the same shuffle-width win as the shingle family (the oracle applies
@@ -191,6 +198,7 @@ object Dedup {
     // a colliding band pair just becomes one more LSH candidate for the
     // downstream exact verify, which LSH tolerates by construction)
     val bands = sig
+      .select(col("doc_id"), checked.as("sigs"))
       .select(col("doc_id"), explode(array((0 until Bands).map(lit(_)): _*)).as("band"), col("sigs"))
       .withColumn("bkey", graft.functions.GenKey(concat_ws(",",
         (1 to NumPerm / Bands).map(r => element_at(col("sigs"), col("band") * (NumPerm / Bands) + r)): _*)))
@@ -207,7 +215,7 @@ object Dedup {
       .sortWithinPartitions("band", "bkey", "doc_id")
       .as(Encoders.product[R])
       .mapPartitions { it =>
-        SortedGroups.runs(it.map { r => check(r); r })(sameBucket)
+        SortedGroups.runs(it)(sameBucket)
           .flatMap(SortedGroups.pairsOrStar(_, MaxBandDf)(pair))
       }(Encoders.product[P])
   }
@@ -252,15 +260,11 @@ object Dedup {
     * of the (unordered) pair — both sides' sigs are in hand — so the
     * distinct over (doc_a, doc_b, n_match) dedupes multi-band hits
     * exactly as the old distinct over (doc_a, doc_b) did. Buffered state
-    * stays O(MaxBandDf) rows, now MaxBandDf × 16 longs. Each row's sigs
-    * must hold exactly NumPerm values (the signature-length contract);
-    * the kernel checks it as the row enters and names the offending doc.
+    * stays O(MaxBandDf) rows, now MaxBandDf × 16 longs.
     */
   private[graft] def scoredCandidatePairs(sig: DataFrame): DataFrame =
     bandPairs[(Int, Long, Long, Seq[Long]), (Long, Long, Long)](sig, col("sigs"))(
       (x, y) => x._1 == y._1 && x._2 == y._2,
-      r => require(r._4.length == NumPerm,
-        s"minhash signature length ${r._4.length} != $NumPerm (doc_id=${r._3})"),
       (a, b) => (a._3, b._3, nMatch(a._4, b._4)))
       .toDF("doc_a", "doc_b", "n_match")
       .distinct()
@@ -269,8 +273,8 @@ object Dedup {
     * zip_with(sigs_a, sigs_b, _ === _) filter-size epilogue (and of the
     * oracle's list_filter(range, i -> sa[i] = sb[i]) length). Walks both
     * sides in step: the Dataset decoder hands sigs over as a List, where
-    * indexing each position would rescan from the head; the kernel's
-    * length check makes both sides NumPerm long.
+    * indexing each position would rescan from the head; the band
+    * projection's length check makes both sides NumPerm long.
     */
   private def nMatch(x: Seq[Long], y: Seq[Long]): Long = {
     val xs = x.iterator; val ys = y.iterator

@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.{Dedup, Multimodal, Similarity, TextAnalysis}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkSpec {
@@ -170,13 +171,11 @@ class PipelineSpec extends SparkSpec {
 
   test("scoredCandidatePairs: a signature shorter than NumPerm fails naming its doc_id") {
     // Signature-length contract: the kernel scores pairs position by
-    // position up to NumPerm, so a short sigs array must be rejected as
-    // its row enters the kernel, with the offending doc named — not die
-    // as a bare index error on whichever pair first reaches it. With
-    // ANSI mode on (the session default) the band key's element_at
-    // already rejects a short array before the exchange, so the kernel
-    // check is exercised on a non-ANSI session, where that key tolerates
-    // it and the row reaches the kernel.
+    // position up to NumPerm, so a short sigs array must be rejected
+    // with the offending doc named — not die as a bare index error. The
+    // band projection checks it before the band key's element_at, which
+    // under ANSI off would tolerate a short array; this case runs on a
+    // non-ANSI session, the default-session cases are below.
     val lenient = spark.newSession()
     lenient.conf.set("spark.sql.ansi.enabled", "false")
     import lenient.implicits._
@@ -186,7 +185,7 @@ class PipelineSpec extends SparkSpec {
     val msgs = failureMessages(Dedup.scoredCandidatePairs(sig).collect())
     assert(msgs.exists(_.contains(contractMessage(Dedup.NumPerm - 1, 2L))),
       s"expected the signature-length contract to name doc 2, got: ${msgs.headOption}")
-    // the default (ANSI) session rejects it too, before the kernel
+    // the default (ANSI) session rejects it too
     val strict = spark.createDataFrame(Seq((0L, full), (2L, full.take(Dedup.NumPerm - 1))))
       .toDF("doc_id", "sigs")
     intercept[Exception](Dedup.scoredCandidatePairs(strict).collect())
@@ -194,14 +193,39 @@ class PipelineSpec extends SparkSpec {
 
   test("scoredCandidatePairs: a signature longer than NumPerm fails naming its doc_id") {
     // A long array passes the band key (it reads positions 1..NumPerm
-    // only) and would be scored on its first NumPerm values; the kernel
-    // rejects it instead.
+    // only) and would be scored on its first NumPerm values; the band
+    // projection rejects it instead.
     import spark.implicits._
     val full = Seq.fill(Dedup.NumPerm)(5L)
     val sig = Seq((0L, full), (1L, full :+ 5L)).toDF("doc_id", "sigs")
     val msgs = failureMessages(Dedup.scoredCandidatePairs(sig).collect())
     assert(msgs.exists(_.contains(contractMessage(Dedup.NumPerm + 1, 1L))),
       s"expected the signature-length contract to name doc 1, got: ${msgs.headOption}")
+  }
+
+  /** Both band-pair paths, d7/d10's and d2's, on the default (ANSI)
+    * session: a signature of `len` values must fail naming its doc_id.
+    */
+  private def assertLengthContract(len: Int): Unit = {
+    import spark.implicits._
+    val full = Seq.fill(Dedup.NumPerm)(5L)
+    val sig = Seq((0L, full), (1L, full), (2L, Seq.fill(len)(5L))).toDF("doc_id", "sigs")
+    Seq[(String, DataFrame => DataFrame)](
+      "candidatePairs" -> Dedup.candidatePairs,
+      "scoredCandidatePairs" -> Dedup.scoredCandidatePairs
+    ).foreach { case (name, pairs) =>
+      val msgs = failureMessages(pairs(sig).collect())
+      assert(msgs.exists(_.contains(contractMessage(len, 2L))),
+        s"$name: expected the signature-length contract to name doc 2, got: ${msgs.headOption}")
+    }
+  }
+
+  test("band pairs: a signature shorter than NumPerm fails naming its doc_id on the default session") {
+    assertLengthContract(Dedup.NumPerm - 1)
+  }
+
+  test("band pairs: a signature longer than NumPerm fails naming its doc_id on the default session") {
+    assertLengthContract(Dedup.NumPerm + 1)
   }
 
   test("d10 purge agrees with d7's groups: dropped = non-keeper members") {

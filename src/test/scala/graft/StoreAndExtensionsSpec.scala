@@ -139,6 +139,99 @@ class StoreAndExtensionsSpec extends SparkSpec {
     assert(after.filter(col("value") =!= -7.5).count() == 0)
   }
 
+  /** A fresh store of the sf cells. */
+  private def freshStore(prefix: String): String = {
+    val path = java.nio.file.Files.createTempDirectory(prefix).toString
+    ArrayStore.materialize(ArrayModel.cells(spark, sf), path)
+    path
+  }
+
+  /** Every parquet file of the store, by partition directory and name, with its mtime. */
+  private def storeFiles(path: String): Map[String, Long] =
+    new java.io.File(s"$path/coll=weather").listFiles().filter(_.isDirectory)
+      .flatMap(d => d.listFiles().filter(_.getName.endsWith(".parquet"))
+        .map(f => s"${d.getName}/${f.getName}" -> f.lastModified()))
+      .toMap
+
+  /** Spark jobs started while `run` runs. */
+  private def jobsStarted(run: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.GraftTestShim.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      run
+      org.apache.spark.GraftTestShim.drainListenerBus(spark.sparkContext)
+      n.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("ArrayStore: a slice read builds with no job, a patch is one job writing one sorted file") {
+    val path = freshStore("graft-jobs")
+    assert(jobsStarted(ArrayStore.sliceRead(ArrayStore.open(spark, path),
+      "weather", "click", (0L, 10L), (0L, 8L))) == 0,
+      "building a slice read over the declared-schema store started a job")
+    val patchJobs = jobsStarted(ArrayStore.patchPartition(spark, path, "weather", "click",
+      (0L, 10L), (0L, 8L), lit(2.5)))
+    assert(patchJobs == 1, s"a patch started $patchJobs jobs")
+    val parts = new java.io.File(s"$path/coll=weather/array_id=click").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(parts.length == 1, s"patched partition holds ${parts.length} files")
+    val keys = spark.read.parquet(parts.head.getPath).select("i0", "i1").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(keys.nonEmpty && keys == keys.sorted, "patched file is not in (i0, i1) order")
+  }
+
+  test("ArrayStore.patchPartition overwrites one partition on a static session, leaving its conf") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      val path = freshStore("graft-static")
+      val before = storeFiles(path)
+      val cells = ArrayStore.open(spark, path).count()
+      ArrayStore.patchPartition(spark, path, "weather", "click", (0L, 5L), (0L, 4L), lit(-1.5))
+      assert(spark.conf.get(key) == "static")
+      val after = storeFiles(path)
+      // every other partition keeps its files; the store keeps every cell
+      assert(after.filterNot(_._1.startsWith("array_id=click/")) ==
+        before.filterNot(_._1.startsWith("array_id=click/")))
+      assert(ArrayStore.open(spark, path).count() == cells)
+      assert(ArrayStore.sliceRead(ArrayStore.open(spark, path), "weather", "click",
+        (0L, 5L), (0L, 4L)).filter(col("value") =!= -1.5).count() == 0)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("ArrayStore.patchPartition of an array not in the store changes no file") {
+    val path = freshStore("graft-missing")
+    val before = storeFiles(path)
+    ArrayStore.patchPartition(spark, path, "weather", "no_such_array", (0L, 5L), (0L, 4L), lit(1.0))
+    assert(storeFiles(path) == before)
+    assert(!new java.io.File(s"$path/coll=weather/array_id=no_such_array").exists())
+  }
+
+  test("ArrayStore: a store materialized from zero cells opens as an empty table") {
+    val path = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    ArrayStore.materialize(ArrayModel.cells(spark, sf).filter(lit(false)), path)
+    val store = ArrayStore.open(spark, path)
+    assert(store.count() == 0)
+    assert(ArrayStore.sliceRead(store, "weather", "click", (0L, 5L), (0L, 4L)).count() == 0)
+  }
+
+  test("ArrayStore.materialize rejects a frame that drifts from the declared schema") {
+    val path = s"${java.nio.file.Files.createTempDirectory("graft-drift")}/store"
+    val drifted = ArrayModel.cells(spark, sf).withColumn("value", col("value").cast("float"))
+    val e = intercept[IllegalArgumentException](ArrayStore.materialize(drifted, path))
+    assert(e.getMessage.contains("value: declared double, got float"), e.getMessage)
+    assert(!new java.io.File(path).exists(), "a drifted frame was written")
+  }
+
   test("GridSource V2: bounds push down and prune whole tiles at plan time") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     val grid = spark.read.format("graft.sources.GridSource")
