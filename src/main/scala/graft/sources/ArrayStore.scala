@@ -12,12 +12,15 @@ import org.apache.spark.sql.types._
   * pruning: a bounds read of one array touches exactly one directory) and
   * sorted within partitions by `(i0, i1)` (row-group zone maps: the dim
   * filters skip row groups before decoding). One file per array partition
-  * keeps the file count linear in arrays, not in executors. Writes sort by
-  * the partition columns first: the file writer needs its input ordered
-  * by them, and a sort that does not lead with them is replaced by one
-  * that does, which drops the `(i0, i1)` order. A frame whose `coll` is a
-  * literal (`ArrayModel.cells`) still loses it in `materialize`: the
-  * optimizer folds the literal out of the sort first.
+  * keeps the file count linear in arrays, not in executors. The file
+  * writer needs its input ordered by the partition columns, and it puts
+  * its own sort on them, replacing the caller's and dropping the
+  * `(i0, i1)` order, unless the caller's sort already leads with them.
+  * The writer leaves a constant partition column out of that order, so
+  * a sort must leave it out too: `materialize` takes frames of one
+  * collection whose `coll` is a literal (`ArrayModel.cells`) and sorts by
+  * `(array_id, i0, i1)`, one sort in the write's plan; `patchPartition`
+  * reads `coll` back from the store and leads with it.
   *
   * The store's schema is declared ([[schema]]), not inferred: `open` runs
   * no parquet footer job, so a Deker request costs only the jobs its
@@ -39,7 +42,9 @@ object ArrayStore {
     StructField("value", DoubleType),
     StructField("coll", StringType), StructField("array_id", StringType)))
 
-  /** Write cells in the pruned layout. */
+  /** Write cells of one collection, with a literal `coll`, in the pruned
+    * layout; each array's file comes out in `(i0, i1)` order.
+    */
   def materialize(cells: DataFrame, path: String): Unit = {
     val got = cells.schema.map(f => f.name -> f.dataType).toMap
     schema.foreach { f =>
@@ -51,7 +56,7 @@ object ArrayStore {
     require(extra.isEmpty, s"cell store: undeclared columns ${extra.mkString(", ")}")
     cells
       .repartition(col("coll"), col("array_id"))
-      .sortWithinPartitions("coll", "array_id", "i0", "i1")
+      .sortWithinPartitions("array_id", "i0", "i1")
       .write.mode("overwrite")
       .partitionBy("coll", "array_id")
       .parquet(path)

@@ -7,11 +7,11 @@ package graft
   */
 class PlanAuditSpec extends SparkSpec {
 
-  /** Queries whose driver-side iteration (localCheckpoint) executes jobs
-    * during planning — audited by their building blocks instead. d10
-    * composes d7's iterative component assembly, so its construction
-    * legitimately runs d7's per-round jobs; its own purge stage is the
-    * broadcast-join shape audited below.
+  /** Queries whose construction builds the stored label table: on the
+    * first call for a corpus its driver-side iteration (localCheckpoint)
+    * runs the connected-components jobs — audited by their building
+    * blocks instead. d7 and d10 both read that table; d10's own purge
+    * stage is the broadcast-join shape audited below.
     */
   private val iterative = Set("d7_dup_groups", "d10_dedup_purge")
 

@@ -185,6 +185,34 @@ class StoreAndExtensionsSpec extends SparkSpec {
     assert(keys.nonEmpty && keys == keys.sorted, "patched file is not in (i0, i1) order")
   }
 
+  test("ArrayStore.materialize: one sort in the write's plan, every array's file in (i0, i1) order") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort}
+    import org.apache.spark.sql.execution.QueryExecution
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.optimizedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      freshStore("graft-order")
+      org.apache.spark.GraftTestShim.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val writes = plans.asScala.filter(_.exists(_.nodeName == "WriteFiles")).toSeq
+    assert(writes.size == 1, s"expected one write, saw ${writes.size}")
+    val sorts = writes.head.collect { case s: Sort => s }
+    assert(sorts.size == 1, s"the write sorts ${sorts.size} times:\n${writes.head}")
+    // the registry's store, file by file
+    val files = ArrayModel.cellsStored(spark, sf).inputFiles
+    assert(files.length > 1, s"store holds ${files.length} files")
+    files.foreach { f =>
+      val keys = spark.read.parquet(f).select("i0", "i1").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(keys.nonEmpty && keys == keys.sorted, s"$f is not in (i0, i1) order")
+    }
+  }
+
   test("ArrayStore.patchPartition overwrites one partition on a static session, leaving its conf") {
     val key = "spark.sql.sources.partitionOverwriteMode"
     val prev = spark.conf.getOption(key)
