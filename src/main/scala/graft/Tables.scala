@@ -80,6 +80,12 @@ object Tables {
     normalizeTs(table(s, d, "orders"), "o_orderdate")
   def lineitem(s: SparkSession, d: String): DataFrame =
     normalizeTs(table(s, d, "lineitem"), "l_shipdate")
+  /** The text corpus: doc_id, text, lang, source, n_chars. `doc_id` is
+    * the row key — one row per document — which the row-local quality
+    * verdict of t8 and st10 assumes: it judges each ROW, while the oracle
+    * joins per-doc_id aggregates, so a repeated doc_id would split the
+    * two apart.
+    */
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
 
   /** The whole s-family's oracle parity rests on float-exact arithmetic

@@ -35,10 +35,12 @@ object Dedup {
   val permA: Seq[Long] = (0 until NumPerm).map(j => (((j + 1) * 2654435761L) % P) | 1L)
   val permB: Seq[Long] = (0 until NumPerm).map(j => ((j + 1) * 40503L * 65537L + 12345L) % P)
 
-  /** 3-word shingles of the space-tokenized text (set semantics). Public:
-    * st7's stream-static decontamination shares the shingling (it must
-    * dedupe per-row via array_distinct instead of a global distinct — a
-    * streaming plan allows only one aggregation).
+  /** 3-word shingle STRINGS of the space-tokenized `toks` column: a doc
+    * of fewer than 3 tokens is one shingle, its tokens joined. The batch
+    * family keys shingles natively ([[shingleKeys]], same shingles);
+    * st7's stream-static decontamination keeps the strings because it
+    * dedupes them per row (array_distinct) before hashing — a streaming
+    * plan allows only one aggregation.
     */
   def shingleCol: Column =
     when(size(col("toks")) >= 3,
@@ -50,22 +52,30 @@ object Dedup {
       |     THEN list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
       |     ELSE [array_to_string(t, ' ')] END""".stripMargin
 
-  /** Distinct (doc_id, shingle-fingerprint) pairs — the shared corpus
-    * representation for the whole shingle family (d2/d4/d7/d9): each
-    * shingle hashes to its u32 key BEFORE the set-dedupe, so every
-    * downstream shuffle (distinct, df cap, minhash agg, self-join,
+  /** One u32 fingerprint per 3-word shingle of `text`: [[shingleCol]]'s
+    * shingles keyed by the native [[graft.functions.ShingleKeys]] — the
+    * shared corpus representation of the shingle family (d2/d4/d7/d9/
+    * d12/d16). Every downstream exchange (df cap, self-join,
     * decontamination join) moves 8-byte keys instead of 20-40 byte
-    * strings. MinHash is min() over the fingerprint multiset, so the
-    * hash-first form is signature-identical; the oracles apply the same
-    * hash, so the (rare) fingerprint merge is mirrored exactly.
+    * strings, and MinHash is min() over the keys, so hashing first is
+    * signature-identical; the oracles apply the same hash, so the (rare)
+    * fingerprint merge is mirrored exactly.
     */
-  def hashedShingles(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .withColumn("toks", split(col("text"), " "))
-      .select(col("doc_id"), explode(shingleCol).as("s"))
-      .select(col("doc_id"), graft.functions.GenKey(col("s")).as("h"))
-      .distinct()
+  private[graft] def shingleKeys: Column =
+    graft.functions.ShingleKeys(split(col("text"), " "))
 
+  /** (doc_id, h) rows, one per shingle occurrence (not distinct): the
+    * explode of the codegen'd key array, with no shingle string and no
+    * lambda anywhere. Consumers dedupe where their rows are few — d9/d12
+    * after the benchmark join (matched rows only), d4/d16 in the sorted
+    * kernel — never per row: round 5's `array_distinct(transform(sgl,
+    * x => GenKey(x)))` evaluated its lambda interpreted per shingle and
+    * cost 13x in the op bench.
+    */
+  private def shingleKeyRows(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir).select(col("doc_id"), explode(shingleKeys).as("h"))
+
+  /** The oracle's distinct (doc_id, h) shingle-key CTE `hs`. */
   val hashedShinglesSql: String =
     s"""hs AS (
        |  SELECT DISTINCT doc_id, ${HashRing.duckGenKey("s")} AS h FROM (
@@ -115,25 +125,22 @@ object Dedup {
       |WHERE n_docs > 1 ORDER BY canonical_hash""".stripMargin
 
   // --- d2_minhash_lsh: near-dup candidate pairs ---------------------------
-  /** MinHash signatures: explode shingles -> one pass of NumPerm mins
-    * (map-side combine; shuffle only on doc_id).
+  private val minHashFamily = new graft.functions.MinHashFamily(permA, permB, P)
+
+  /** MinHash signatures, one row per doc_id: each row's signature comes
+    * from its own shingle keys in one codegen'd call
+    * ([[graft.functions.MinHash]]) — no shingle rows, no per-shingle
+    * exchange. The element-wise min by doc_id that follows keeps the
+    * signature exact when a doc_id spans several rows (the oracle's
+    * GROUP BY doc_id); its exchange carries one row per document.
     */
   def signatures(s: SparkSession, dir: String): DataFrame = {
-    // min() over the fingerprint MULTISET equals min() over the set, so
-    // signatures skip hashedShingles' distinct: raw exploded shingles go
-    // straight into one partial-agg'd groupBy — map-side combine collapses
-    // each partition to 16 mins per doc before the only shuffle. The
-    // fingerprint is projected once per shingle row (16 min() aggs
-    // referencing GenKey(s) directly would digest the string 16 times).
-    val aggs = (0 until NumPerm).map { j =>
-      min(pmod(lit(permA(j)) * col("h") + lit(permB(j)), lit(P))).as(s"sig_$j")
-    }
+    val mins = (0 until NumPerm).map(j => min(col("sig")(j)).as(s"sig_$j"))
     Tables.documents(s, dir)
-      .withColumn("toks", split(col("text"), " "))
-      .select(col("doc_id"), explode(shingleCol).as("s"))
-      .select(col("doc_id"), graft.functions.GenKey(col("s")).as("h"))
+      .select(col("doc_id"),
+        graft.functions.MinHash(shingleKeys, minHashFamily).as("sig"))
       .groupBy("doc_id")
-      .agg(aggs.head, aggs.tail: _*)
+      .agg(mins.head, mins.tail: _*)
       .select(col("doc_id"),
         array((0 until NumPerm).map(j => col(s"sig_$j")): _*).as("sigs"))
   }
@@ -386,10 +393,7 @@ object Dedup {
     */
   private def shingleOverlap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val keyed = Tables.documents(s, dir)
-      .withColumn("toks", split(col("text"), " "))
-      .select(col("doc_id"), explode(shingleCol).as("s"))
-      .select(graft.functions.GenKey(col("s")).as("h"), col("doc_id"))
+    val keyed = shingleKeyRows(s, dir).select("h", "doc_id")
     val tagged = repartitionSized(keyed, shingleShufflePartitions(s, dir), col("h"))
       .sortWithinPartitions("h", "doc_id")
       .as[(Long, Long)]
@@ -1293,24 +1297,8 @@ object Dedup {
   // shuffles by shingle.
   val ContamThreshold = 5
 
-  /** Non-distinct (doc_id, shingle-fingerprint) rows: explode + a native
-    * GenKey projection — every expression codegen'd. Round 5's lesson
-    * (measured 13x in the driver bench): the "zero-shuffle" per-row dedupe
-    * `array_distinct(transform(sgl, x => GenKey(x)))` evaluates the
-    * lambda INTERPRETED per shingle per row — per-element expression
-    * machinery costs far more than the cheap 8-byte-key exchange it
-    * saved. Dedupe instead happens after the broadcast semi-join, where
-    * only matched (contaminated-overlap) rows remain — sub-linear in the
-    * corpus at any scale.
-    */
-  private def hashedShingleRows(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .withColumn("toks", split(col("text"), " "))
-      .select(col("doc_id"), explode(shingleCol).as("s"))
-      .select(col("doc_id"), graft.functions.GenKey(col("s")).as("h"))
-
   def d9Decontaminate(s: SparkSession, dir: String): DataFrame = {
-    val sh = hashedShingleRows(s, dir)
+    val sh = shingleKeyRows(s, dir)
     val bench = sh.filter(col("doc_id") < 20).select("h").distinct()
     // corpus side: map-side broadcast semi-join, then a distinct-count
     // whose partial aggregation dedupes (doc_id, h) before the only
@@ -1509,7 +1497,7 @@ object Dedup {
   // bloom-positive iff every one of its K positions is in the union of
   // benchmark positions — precisely what the bitset stores.
   def d12BloomDecontaminate(s: SparkSession, dir: String): DataFrame = {
-    val sh = hashedShingleRows(s, dir)
+    val sh = shingleKeyRows(s, dir)
     val bench = sh.filter(col("doc_id") < 20).select("h").distinct()
     val bloom = bench.agg(graft.functions.BloomBuildAgg(col("h")).as("bloom"))
     val cand = sh.filter(col("doc_id") >= 20)
@@ -1623,12 +1611,11 @@ object Dedup {
   // DataFrame sub-plan the standalone operator ships — the point is that
   // the stages COMPOSE: Catalyst sees one tree (per-doc flags via joins,
   // then a single partial-agg'd rollup), not five materialized passes.
-  // Scale: t8's per-doc verdict co-partitions on doc_id; d9's flag list
-  // and the >1-copy keeper table are sub-linear (broadcast; hash join
-  // beyond); d8/d14 flags are map-side hash arithmetic; ONE corpus-wide
-  // rollup at the end.
+  // Scale: t8's per-doc verdict is row-local on the funnel's own scan;
+  // d9's flag list and the >1-copy keeper table are sub-linear
+  // (broadcast; hash join beyond); d8/d14 flags are map-side hash
+  // arithmetic; ONE corpus-wide rollup at the end.
   def d15CurationFunnel(s: SparkSession, dir: String): DataFrame = {
-    val quality = TextAnalysis.t8QualityFilter(s, dir).select("doc_id", "keep")
     val contam = d9Decontaminate(s, dir)
       .select(col("doc_id"), lit(true).as("contaminated"))
     // keeper table restricted to >1-copy groups: sub-linear in the corpus
@@ -1645,9 +1632,10 @@ object Dedup {
     // against a huge benchmark and >1-copy groups under heavy
     // duplication can each outgrow broadcast — the planner must stay
     // free to shuffle-join either
-    Tables.documents(s, dir)
+    // the same rows t8 judges (null text has no verdict)
+    TextAnalysis.qualityVerdicts(
+        Tables.documents(s, dir).filter(col("text").isNotNull))
       .withColumn("chash", md5(col("text").cast("binary")))
-      .join(quality, "doc_id")
       .join(contam, Seq("doc_id"), "left")
       .join(keepers, Seq("chash"), "left")
       .withColumn("clean",

@@ -71,9 +71,8 @@ object TextAnalysis {
   // --- t2_quality_score ---------------------------------------------------
   // length / token-length / marker-density ratios -> [0,1] quality score.
   /** THE quality/ratio formulas — single definition on purpose (the
-    * splitHash doctrine): t2's map-only plan and t8's fused token-stats
-    * kernel (round 15) both derive quality from (n_tokens, n_marker,
-    * len_nospace), and identical Column trees mean identical IEEE
+    * splitHash doctrine): t2's score and the t8/st10 verdict both come
+    * from [[withQuality]], so identical Column trees mean identical IEEE
     * arithmetic by construction, not by parallel edits.
     */
   private[pipeline] def avgTokenLenCol(lenNospace: Column, nTokens: Column): Column =
@@ -85,28 +84,38 @@ object TextAnalysis {
     least(nTokens.cast("double") / 100, lit(1.0)) * 0.4 +
       markerRatio * 0.3 +
       least(avgTokenLen / 8, lit(1.0)) * 0.3
-  /** t6's ratio, shared with t8's fused kernel for the same reason. */
+  /** t6's ratio, shared with the verdict for the same reason. */
   private[pipeline] def ttrCol(nTypes: Column, nTokens: Column): Column =
     nTypes.cast("double") / nTokens.cast("double")
 
-  def t2Quality(s: SparkSession, dir: String): DataFrame = {
+  /** `docs` plus its per-row token statistics and t2's quality score:
+    * toks, n_tokens, n_marker, len_nospace, avg_token_len, marker_ratio,
+    * quality. Every count is an array size or string length of the row
+    * itself — no explode, no shuffle. len_nospace counts the code points
+    * outside the n_tokens - 1 single-space separators that `split` cut,
+    * the same integer as the oracle's length(replace(text, ' ', '')).
+    */
+  private def withQuality(docs: DataFrame): DataFrame = {
     val allMarkers = markers.values.flatten.toSeq.sorted
-    Tables.documents(s, dir)
+    docs
       .withColumn("toks", split(col("text"), " "))
       .withColumn("n_tokens", size(col("toks")).cast("long"))
       .withColumn("n_marker", size(filter(col("toks"),
         t => allMarkers.map(w => t === w).reduce(_ || _))).cast("long"))
       .withColumn("len_nospace",
-        length(regexp_replace(col("text"), " ", "")).cast("long"))
+        length(col("text")).cast("long") - col("n_tokens") + 1L)
       .withColumn("avg_token_len",
         avgTokenLenCol(col("len_nospace"), col("n_tokens")))
       .withColumn("marker_ratio",
         markerRatioCol(col("n_marker"), col("n_tokens")))
       .withColumn("quality",
         qualityCol(col("n_tokens"), col("marker_ratio"), col("avg_token_len")))
+  }
+
+  def t2Quality(s: SparkSession, dir: String): DataFrame =
+    withQuality(Tables.documents(s, dir))
       .select("doc_id", "n_tokens", "avg_token_len", "marker_ratio", "quality")
       .orderBy("doc_id")
-  }
 
   val t2Sql: String = {
     val allMarkers = markers.values.flatten.toSeq.sorted
@@ -297,51 +306,38 @@ object TextAnalysis {
   // --- t8_quality_filter: the shipped filter stage ------------------------
   // The text-family analogue of d10: curation pipelines don't apply
   // signals one at a time, they ship ONE filter decision per document
-  // with an auditable reject reason. Composes t2 (quality score), t6
-  // (lexical diversity) and t7 (repetition) as sub-plans joined on
-  // doc_id — three per-doc aggregations co-partitioned on the same key,
-  // then a pure column-expression verdict. No new float arithmetic: the
-  // thresholds compare doubles both engines already agree on bit-exactly.
+  // with an auditable reject reason, combining t2 (quality score), t6
+  // (lexical diversity) and t7 (repetition). No new float arithmetic:
+  // the thresholds compare doubles both engines already agree on
+  // bit-exactly.
   val MinQuality = 0.42
   val MinTtr = 0.35
   val MaxDupBigramFrac = 0.06
 
-  def t8QualityFilter(s: SparkSession, dir: String): DataFrame = {
-    // Fused t2+t6 kernel (round 15, guide §6/§2.3): every t2 component
-    // — token count, no-space length (= sum of token code-point lengths
-    // under single-space splitting), marker hits — is derivable from the
-    // SAME token explode t6's distinct-aggregation already pays for, so
-    // one scan + one two-phase aggregation produces quality AND ttr.
-    // The old shape ran t2's separate corpus scan and shuffled its
-    // per-doc stats through a third join input; plan: 3 document scans →
-    // 2, joins 2 → 1. The standalone t2 (map-only — cheaper than an
-    // explode when quality is all you want) and t6 plans are unchanged;
-    // the shared column builders (qualityCol/ttrCol/...) keep the
-    // formulas identical by construction, and the unchanged t8/d15
-    // oracles (which still compose t2Sql/t6Sql) gate the equivalence.
-    val allMarkers = markers.values.flatten.toSeq.sorted
-    val stats = Tables.documents(s, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tokens"),
-           countDistinct(col("tok")).as("n_types"),
-           sum(length(col("tok")).cast("long")).as("len_nospace"),
-           sum(when(allMarkers.map(w => col("tok") === w).reduce(_ || _), 1L)
-             .otherwise(0L)).as("n_marker"))
-      .withColumn("avg_token_len",
-        avgTokenLenCol(col("len_nospace"), col("n_tokens")))
-      .withColumn("marker_ratio",
-        markerRatioCol(col("n_marker"), col("n_tokens")))
-      .withColumn("quality",
-        qualityCol(col("n_tokens"), col("marker_ratio"), col("avg_token_len")))
-      .withColumn("ttr", ttrCol(col("n_types"), col("n_tokens")))
-      .select("doc_id", "quality", "ttr")
-    val rep = t7Repetition(s, dir).select("doc_id", "dup_bigram_frac")
-    // t7 has no row for docs with < 2 tokens (no bigrams); the filter
-    // contract is one verdict per document, so LEFT join and treat a
-    // bigram-less doc as non-repetitive (dup fraction 0)
-    stats.join(rep, Seq("doc_id"), "left")
-      .withColumn("dup_bigram_frac", coalesce(col("dup_bigram_frac"), lit(0.0)))
+  /** THE per-document quality verdict, shared by t8 (batch) and st10
+    * (stream boundary): `docs` plus withQuality's columns, ttr,
+    * dup_bigram_frac, keep and reject_reason. It is row-local: t6's
+    * distinct-token count and t7's duplicate-bigram count are the sizes
+    * of per-row `array_distinct`s over the token array and its native
+    * bigram keys ([[graft.functions.BigramKeys]], the same u32 keys t7
+    * groups by) — the same integers the t6/t7 groupBys produce, with no
+    * explode, no shuffle and no state store. A doc of fewer than 2
+    * tokens has no bigrams and counts as non-repetitive (fraction 0.0,
+    * t8's oracle coalesces t7's missing row the same way). Each input
+    * ROW gets one verdict: the caller's `doc_id` must be a row key
+    * (`Tables.documents`' contract), since the oracle joins per-doc_id
+    * aggregates.
+    */
+  def qualityVerdicts(docs: DataFrame): DataFrame = {
+    val bigrams = graft.functions.BigramKeys(col("toks"))
+    withQuality(docs)
+      .withColumn("ttr",
+        ttrCol(size(array_distinct(col("toks"))), col("n_tokens")))
+      .withColumn("dup_bigram_frac",
+        when(col("n_tokens") >= 2,
+          (size(bigrams) - size(array_distinct(bigrams))).cast("double") /
+            size(bigrams))
+          .otherwise(lit(0.0)))
       .withColumn("keep",
         col("quality") >= MinQuality && col("ttr") >= MinTtr &&
           col("dup_bigram_frac") <= MaxDupBigramFrac)
@@ -350,9 +346,22 @@ object TextAnalysis {
           .when(col("ttr") < MinTtr, "low_diversity")
           .when(col("dup_bigram_frac") > MaxDupBigramFrac, "repetitive")
           .otherwise("ok"))
-      .select("doc_id", "quality", "ttr", "dup_bigram_frac", "keep", "reject_reason")
-      .orderBy("doc_id")
   }
+
+  /** The verdict over the corpus, one row per document with text: a
+    * null-text doc has no tokens to judge (its t6/t7 legs are empty), so
+    * it gets no row. Plan: scan → the orderBy's one exchange → project.
+    * The sort goes first because a range exchange runs its child twice
+    * (once to sample the bounds, once to shuffle): sorting the scanned
+    * (doc_id, text) rows runs the verdict kernel once per document
+    * instead of twice, at the price of an exchange that carries the text
+    * instead of the verdict row (seed-1 curation corpus, `local[2]`
+    * pinned to 2 CPUs: 1,058 → 807 ms median per t8).
+    */
+  def t8QualityFilter(s: SparkSession, dir: String): DataFrame =
+    qualityVerdicts(Tables.documents(s, dir).filter(col("text").isNotNull)
+        .select("doc_id", "text").orderBy("doc_id"))
+      .select("doc_id", "quality", "ttr", "dup_bigram_frac", "keep", "reject_reason")
 
   val t8Sql: String =
     s"""WITH t2r AS ($t2Sql),

@@ -463,73 +463,16 @@ object Streams {
   /** t8's one-verdict-per-document quality filter moved to the stream
     * boundary, completing the gate symmetry — every batch curation gate
     * now has a stream twin: d9→st7 (decontamination), d8→st8 (mixture),
-    * m5→st9 (sharding), t8→st10 (quality). The verdict is STATELESS:
-    * t2's score is already pure column arithmetic, and t6's TTR / t7's
-    * duplicate-bigram fraction reduce to per-row `array_distinct` counts
-    * over the token / hashed-bigram arrays — the same integers the batch
-    * groupBys produce, so the stream verdict is bit-identical to t8's
-    * (PROVEN against t8 row-for-row in StreamingSpec, not assumed). That
-    * per-row reduction is what makes the gate deployable at ingest: no
-    * shuffle, no state store, replay-deterministic admission. The
-    * admission report — doc/token counts per verdict — is the one
-    * complete-mode rollup the ingest writer watches (documents carry no
-    * event time; st9's shape). The bigram hash is the SAME GenKey u32
-    * t7 fingerprints with, so a (vanishingly rare) in-doc hash collision
-    * biases stream and batch identically instead of opening a gap.
+    * m5→st9 (sharding), t8→st10 (quality). The verdict is t8's own
+    * [[graft.pipeline.TextAnalysis.qualityVerdicts]], which is STATELESS
+    * (every signal is a per-row array size), so the stream verdict is
+    * t8's by construction: no shuffle, no state store,
+    * replay-deterministic admission. The admission report — doc/token
+    * counts per verdict — is the one complete-mode rollup the ingest
+    * writer watches (documents carry no event time; st9's shape).
     */
-  /** Per-document stateless verdict (exposed separately so the spec can
-    * prove it equals t8's batch verdict doc-for-doc, not just in the
-    * aggregated report).
-    */
-  def qualityVerdicts(docs: DataFrame): DataFrame = {
-    val allMarkers = graft.pipeline.TextAnalysis.markers.values.flatten.toSeq.sorted
-    import graft.pipeline.TextAnalysis.{MinQuality, MinTtr, MaxDupBigramFrac}
-    val toks = col("toks")
-    // Per-bigram hashes via the native fused BigramKeys expression — one
-    // codegen call per row. (The first version used the composed
-    // md5/conv ring hash inside a transform() lambda, which evaluates
-    // interpreted PER BIGRAM: at sf0.1 that made this stateless gate the
-    // single slowest op in the whole bench, 2.5 s vs 0.4 s fused — the
-    // t4 RollingFingerprint lesson again.) Same md5-LE-u32 values as
-    // t7/t8's GenKey, so an (astronomically rare) in-doc collision
-    // biases this gate and the batch ops identically instead of opening
-    // a gap.
-    val bigramHashes = graft.functions.BigramKeys(toks)
-    docs
-      .withColumn("toks", split(col("text"), " "))
-      .withColumn("n_tokens", size(toks).cast("long"))
-      .withColumn("n_marker", size(filter(toks,
-        t => allMarkers.map(w => t === w).reduce(_ || _))).cast("long"))
-      .withColumn("len_nospace",
-        length(regexp_replace(col("text"), " ", "")).cast("long"))
-      .withColumn("avg_token_len",
-        col("len_nospace").cast("double") / col("n_tokens"))
-      .withColumn("marker_ratio",
-        col("n_marker").cast("double") / col("n_tokens"))
-      .withColumn("quality",
-        least(col("n_tokens").cast("double") / 100, lit(1.0)) * 0.4 +
-          col("marker_ratio") * 0.3 +
-          least(col("avg_token_len") / 8, lit(1.0)) * 0.3)
-      .withColumn("ttr",
-        size(array_distinct(toks)).cast("double") /
-          col("n_tokens").cast("double"))
-      .withColumn("dup_bigram_frac",
-        when(size(toks) >= 2,
-          (size(bigramHashes) - size(array_distinct(bigramHashes))).cast("double") /
-            size(bigramHashes))
-          .otherwise(lit(0.0)))
-      .withColumn("keep",
-        col("quality") >= MinQuality && col("ttr") >= MinTtr &&
-          col("dup_bigram_frac") <= MaxDupBigramFrac)
-      .withColumn("reject_reason",
-        when(col("quality") < MinQuality, "low_quality")
-          .when(col("ttr") < MinTtr, "low_diversity")
-          .when(col("dup_bigram_frac") > MaxDupBigramFrac, "repetitive")
-          .otherwise("ok"))
-  }
-
   def qualityGateTransform(docs: DataFrame): DataFrame =
-    qualityVerdicts(docs)
+    graft.pipeline.TextAnalysis.qualityVerdicts(docs)
       .groupBy("keep", "reject_reason")
       .agg(count(lit(1)).as("n_docs"),
            sum(col("n_tokens")).as("total_tokens"))

@@ -262,6 +262,32 @@ class PlanAuditSpec extends SparkSpec {
       s"bloom build is not partial-aggregated:\n${plan.take(1200)}")
   }
 
+  test("t8 and MinHash signatures are row-local: no Generate, t8 shuffles only to sort") {
+    // The curation pass's per-document statistics are computed inside
+    // each document's row (array sizes, native key arrays), not by
+    // exploding tokens or shingles into rows and regrouping by doc_id.
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    def plan(df: org.apache.spark.sql.DataFrame): SparkPlan =
+      df.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan
+        case other => other
+      }
+    val t8 = plan(SparkEntry.queries("t8_quality_filter")(spark, sf))
+    assert(t8.collect { case g: GenerateExec => g }.isEmpty,
+      s"t8 explodes rows:\n${t8.toString.take(1500)}")
+    val exchanges = t8.collect { case e: Exchange => e }
+    assert(exchanges.length == 1 && (exchanges.head match {
+        case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
+        case _ => false
+      }), s"t8's only exchange must be its orderBy's range partitioning:\n${t8.toString.take(1500)}")
+    val sigs = plan(pipeline.Dedup.signatures(spark, sf))
+    assert(sigs.collect { case g: GenerateExec => g }.isEmpty,
+      s"signatures explode shingles:\n${sigs.toString.take(1500)}")
+  }
+
   test("no native graft expression evaluates under an interpreted lambda") {
     // A higher-order function's lambda is NOT whole-stage-codegen'd: it
     // evaluates through interpreted expression machinery once per array
@@ -269,9 +295,14 @@ class PlanAuditSpec extends SparkSpec {
     // forfeits its codegen — round 5's d9 did exactly this
     // (array_distinct(transform(sgl, x => GenKey(x)))) and paid 13x in
     // the driver bench. Array-BUILDING lambdas over plain expressions
-    // (shingleCol's concat_ws transform: one array per row, no custom
-    // expr inside) stay acceptable; a graft.* expression under a lambda
-    // never is — apply it natively after explode instead.
+    // (the marker filter of t1/t2/t8, st7's shingle strings) pass this
+    // audit but still evaluate interpreted per element: shingleCol's
+    // concat_ws transform built every shingle string of the d-family
+    // until the native ShingleKeys array (with a per-row MinHash)
+    // replaced it — traced seed-1 curation_pass, local[2] on a 4-vCPU
+    // host, exec CPU d2 1392 → 520 ms, d7 1195 → 836 ms, d12 1205 →
+    // 815 ms. A graft.* expression under a lambda is never acceptable —
+    // apply it natively, to the whole array or after explode, instead.
     import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
     def offenses(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.queryExecution.analyzed.flatMap(_.expressions).flatMap(_.collect {

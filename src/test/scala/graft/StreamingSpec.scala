@@ -335,12 +335,14 @@ class StreamingSpec extends SparkSpec {
            batch.except(streamed).count() == 0,
       "streaming admission report != batch admission report")
     // The gate's stateless per-row verdict must be BIT-IDENTICAL to t8's
-    // batch filter (which computes the same three signals via groupBys):
-    // every doc, same keep flag, same reject reason.
-    val t8 = graft.pipeline.TextAnalysis.t8QualityFilter(spark, sf)
+    // verdict computed the grouped way (token explode + groupBy(doc_id)
+    // for t2/t6, t7's grouped repetition — the reference plan t8 ran
+    // before it became this same row-local verdict): every doc, same
+    // keep flag, same reject reason.
+    val t8 = graft.pipeline.ReferencePlans.t8Grouped(spark, sf)
       .select("doc_id", "keep", "reject_reason").collect()
       .map(r => r.getLong(0) -> ((r.getBoolean(1), r.getString(2)))).toMap
-    val v = Streams.qualityVerdicts(Tables.documents(spark, sf))
+    val v = graft.pipeline.TextAnalysis.qualityVerdicts(Tables.documents(spark, sf))
       .select("doc_id", "keep", "reject_reason").collect()
     assert(v.length == t8.size, s"verdict count ${v.length} != t8 ${t8.size}")
     v.foreach { r =>
