@@ -1,17 +1,58 @@
 package graft
 
+import org.apache.hadoop.fs.{LocatedFileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
   *
-  * Plain `spark.read.parquet` — schema comes from the footer; column pruning
-  * and filter pushdown then happen at the scan via Catalyst, which is the
-  * scale-path we care about (verified with `.explain`: `PushedFilters`,
-  * `ReadSchema`).
+  * Each table is read with a schema resolved on the driver from ONE
+  * parquet footer ([[footerSchema]]), so building a DataFrame launches no
+  * Spark job; `spark.read.parquet` without a schema would run a footer/
+  * schema-merge job per load. Column pruning and filter pushdown then
+  * happen at the scan via Catalyst, which is the scale-path we care about
+  * (verified with `.explain`: `PushedFilters`, `ReadSchema`).
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** The Spark schema of the parquet data at `path` (a file or a
+    * directory), read from the footer of its first data file in name
+    * order — Spark's own non-merging inference also takes one file's
+    * footer as the schema — and converted by Spark's footer converter
+    * under the session's parquet flags. Runs on the driver: no Spark job.
+    * None when `path` holds no data file, so the caller's plain read
+    * raises Spark's own error for a missing or empty table.
+    */
+  def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    if (!fs.exists(root)) None
+    else {
+      val files = fs.listFiles(root, true)
+      var first: Option[LocatedFileStatus] = None
+      while (files.hasNext) {
+        val f = files.next()
+        val name = f.getPath.getName
+        if (!name.startsWith("_") && !name.startsWith(".") &&
+            first.forall(_.getPath.toString > f.getPath.toString)) first = Some(f)
+      }
+      first.map { f =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
+    }
+  }
 
   /** events.ts has shipped in three parquet encodings across testdata
     * generations: TIMESTAMP(NANOS) (Spark 4 reads those as a nanos long
@@ -66,9 +107,12 @@ object Tables {
         s"$colName: expected nanos LongType, TimestampType, TimestampNTZType or DateType, got $other")
     }
 
+  /** events keeps Spark's inferring read: its schema depends on the
+    * session-wide `nanosAsLong` flag set here.
+    */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(table(s, d, "events"))
+    normalizeTs(s.read.parquet(s"$d/events.parquet"))
   }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")

@@ -172,17 +172,22 @@ object Dedup {
     */
   val MaxBandDf = 16
 
-  /** LSH band-bucket candidate pairs (doc_a < doc_b), from a signature DF.
-    * Shared by d2 (which re-ranks by signature agreement) and d7 (which
-    * assembles candidate pairs into duplicate groups).
+  /** LSH band-bucket candidate pairs as d7's edge list: every bucket pair
+    * (a, b), a < b, in both directions, repeats kept (a pair colliding in
+    * several bands comes once per band). Min-label propagation gives the
+    * same labels on repeated edges, so the CC loop needs no distinct
+    * exchange and no symmetrizing union. d2 scores the same pair set
+    * ([[scoredCandidatePairs]]).
     */
-  def candidatePairs(sig: DataFrame): DataFrame =
+  private[graft] def candidateEdges(sig: DataFrame): Dataset[(Long, Long)] =
+    bucketPairs(sig).flatMap { case (a, b) => Iterator((a, b), (b, a)) }(
+      Encoders.product[(Long, Long)])
+
+  private def bucketPairs(sig: DataFrame): Dataset[(Long, Long)] =
     bandPairs[(Int, Long, Long), (Long, Long)](sig)(
       (x, y) => x._1 == y._1 && x._2 == y._2, (a, b) => (a._3, b._3))
-      .toDF("doc_a", "doc_b")
-      .distinct()
 
-  /** The band builder and bucket pass behind [[candidatePairs]] and
+  /** The band builder and bucket pass behind [[candidateEdges]] and
     * [[scoredCandidatePairs]], so both change together: the rows are
     * (band, bkey, doc_id) plus the `carry` columns, and `pair` forms the
     * output row of a bucket pair (a, b), a < b. Every signature must hold
@@ -228,7 +233,7 @@ object Dedup {
   }
 
   /** The pairs CTE chain shared by d2/d7/d10 oracles (needs shingles+sigs);
-    * mirrors candidatePairs' u32 band-key fingerprint AND its bucket cap:
+    * mirrors the band kernel's u32 band-key fingerprint AND its bucket cap:
     * a pair from an over-cap bucket survives only if its smaller side is
     * the bucket min (the star anchor).
     */
@@ -250,8 +255,9 @@ object Dedup {
        |  WHERE c.df <= $MaxBandDf OR l.doc_id = c.anchor)""".stripMargin
   }
 
-  /** [[candidatePairs]] with the pair's signature agreement computed IN
-    * the kernel (round 15, guide §2.3/§2.4): band rows carry their doc's
+  /** The band-bucket pairs (doc_a < doc_b, distinct) with the pair's
+    * signature agreement computed IN the kernel (round 15, guide
+    * §2.3/§2.4): band rows carry their doc's
     * 16-long signature across the one (band, bkey) exchange, so the
     * group-streaming pass that forms each pair already holds both sides'
     * sigs and emits (doc_a, doc_b, n_match) directly. This replaces d2's
@@ -1046,31 +1052,57 @@ object Dedup {
   // --- d7_dup_groups: duplicate-group assembly (connected components) -----
   // The step after candidate generation in every dedup pipeline: pairs are
   // not groups — transitively-linked docs must collapse to ONE keeper. Min-
-  // label propagation over the LSH candidate graph: each round is one
-  // join + partial-agg min (shuffle on doc id), rounds = component
-  // diameter (near-dup clusters are shallow — a handful of rounds), with
-  // localCheckpoint truncating lineage between rounds. The oracle replays
-  // it as a recursive transitive closure.
+  // label propagation over the LSH candidate graph, Pregel-style: each doc
+  // carries (label, neighbours) as its state, so the edges need no table
+  // of their own. A doc's neighbours are split over state rows of at most
+  // CcSlice each, so no row grows with a hot bucket's star anchor.
+  //  - Before the loop: the band kernel's both-direction edges cross ONE
+  //    exchange by doc, which builds the state with the initial label
+  //    min(doc, neighbours). With the signature and band exchanges that is
+  //    three exchanges (three map-stage jobs under AQE), and nothing is
+  //    materialized yet.
+  //  - A round is one message exchange (each state row, plus its label
+  //    sent to every neighbour, by doc) and ONE job that runs its result
+  //    stage: a pass over the round's lazy localCheckpoint of the new
+  //    state, which materializes it and counts the docs whose label
+  //    dropped in an accumulator. Convergence is that count reaching 0.
+  //  - The count is taken downstream of the checkpoint, so a retried task
+  //    that finds the block cached still counts its rows; Spark merges
+  //    the updates of one successful attempt per result task, so the
+  //    count is exact.
+  //  - Only the newest state is checkpointed: the one before it is
+  //    released once its successor is materialized. After the loop, one
+  //    write copies the last state's (doc, label) rows from its cached
+  //    blocks to the label store, and the state is released.
+  // Rounds = component diameter (near-dup clusters are shallow); on a
+  // shallow corpus the one round only confirms the initial labels, so the
+  // whole assembly is four exchanges, one counting job and the write. A
+  // write per round in place of the count would save that write on one
+  // round but cost a parquet commit on every round: on a 64-doc chain
+  // (63 rounds, local[2]) that ran 10.1–10.8 s against 4.6–4.9 s.
+  // The oracle replays it as a recursive transitive closure.
   /** Release a localCheckpoint's materialized blocks. Dataset.unpersist
     * only consults the cache manager, which never saw a checkpoint — the
     * blocks belong to the internal RDD inside the plan's LogicalRDD node
-    * (and a derived projection's plan still contains that node).
+    * (and a derived projection's plan still contains that node). A plan
+    * with no checkpoint in it (the CC loop's lazy initial state) has
+    * nothing to release.
     */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
+  private def releaseCheckpoint(ds: Dataset[_]): Unit =
+    ds.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         // a localCheckpoint's blocks are UNRECOVERABLE once unpersisted
         // (lineage is truncated at checkpoint time): this release is only
         // sound because the checkpoint being released has been
-        // MATERIALIZED — eagerly at checkpoint time, or lazily by an
-        // intervening action (the CC loop's convergence count() is that
-        // action since round 14) — and a round is released strictly after
+        // MATERIALIZED — by the round's counting job, the action that
+        // runs its result stage — and a round is released strictly after
         // its successor materialized. A reorder that releases before the
         // materializing action must fail here, loudly, not lose blocks
-        // mid-query later.
-        require(lr.rdd.isCheckpointed,
+        // mid-query later. An RDD of no partitions (an empty graph) has
+        // no blocks to lose.
+        require(lr.rdd.isCheckpointed || lr.rdd.partitions.isEmpty,
           "releaseCheckpoint called on a non-materialized checkpoint RDD — " +
-            "the localCheckpoint() producing it must stay eager")
+            "an action must run over the localCheckpoint() before its release")
         // blocking=false is a measured choice, not an oversight: the
         // blocking=true alternative was A/B'd standalone (8 runs each,
         // same host) for d7 — it adds ~20% deterministic cost (min 1.43s
@@ -1083,54 +1115,91 @@ object Dedup {
       case _ => ()
     }
 
-  /** The CC loop proper: candidate edges → (doc, min-label). Runs once per
-    * `documents` stamp via [[labelsStored]]; d7 formats its output, d10
-    * joins it against the corpus.
+  /** A CC state row: (doc, label, label before the round, head, a slice
+    * of at most [[CcSlice]] of the doc's distinct neighbours). A doc with
+    * more neighbours has several rows carrying the same labels; `head`
+    * marks the one the label store keeps. A message row in a round's
+    * exchange is (doc, label, label, false, null).
     */
-  private def ccLabels(s: SparkSession, dir: String): DataFrame = {
-    val edges = candidatePairs(signatures(s, dir))
-    val sym = edges.unionByName(
-      edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .localCheckpoint()
-    var labels = sym.select(col("doc_a").as("doc"), col("doc_a").as("lbl"))
-      .unionByName(sym.select(col("doc_a").as("doc"), col("doc_b").as("lbl")))
-      .groupBy("doc").agg(min(col("lbl")).as("lbl"))
-      .localCheckpoint()
-    var changed = 1L
-    while (changed > 0) {
-      val nbrMin = sym
-        .join(labels.select(col("doc").as("doc_b"), col("lbl").as("nlbl")), "doc_b")
-        .groupBy(col("doc_a").as("doc")).agg(min(col("nlbl")).as("nbr_lbl"))
-      // carry the pre-round label through the checkpoint so convergence is
-      // a local scan of already-materialized partitions — not an extra
-      // join job against the previous round per iteration
-      // lazy checkpoint + count = ONE pass per iteration (round 14): the
-      // eager form ran a materialization job and then a second count job
-      // over the cached blocks; the convergence count is itself the
-      // action that materializes the round, so fusing them saves a full
-      // labels-table pass per iteration at any scale. The old round's
-      // blocks are released only after the count, so the materializing
-      // pass still reads them cached.
-      val next = labels.join(nbrMin, Seq("doc"))
-        .select(col("doc"), least(col("lbl"), col("nbr_lbl")).as("lbl"),
-                col("lbl").as("old"))
-        .localCheckpoint(eager = false)
-      // this count() MATERIALIZES the lazy checkpoint above — it must run
-      // before releaseCheckpoint(labels) below (releaseCheckpoint requires
-      // a materialized checkpoint and would throw on a reorder)
-      changed = next.filter(col("lbl") < col("old")).count()
-      // release the superseded round's checkpoint blocks NOW — round 5
-      // left every round of every d7/d10 invocation pinned in storage
-      // memory for the whole session (6+ chains per bench run)
-      releaseCheckpoint(labels)
-      labels = next.select("doc", "lbl")
+  private type CcState = (Long, Long, Long, Boolean, Array[Long])
+  private val ccEnc = Encoders.product[CcState]
+
+  /** Neighbours per CC state row: bounds the row that a star anchor of an
+    * over-cap bucket would otherwise grow to the bucket's size.
+    */
+  private[graft] val CcSlice = 256
+
+  /** The CC state before the first round: each doc's distinct neighbours
+    * in slices, labelled min(doc, neighbours).
+    */
+  private[graft] def ccState(sig: DataFrame): Dataset[CcState] =
+    candidateEdges(sig).toDF("doc", "nbr")
+      .repartition(col("doc")).sortWithinPartitions("doc", "nbr")
+      .as(Encoders.product[(Long, Long)])
+      .mapPartitions { it =>
+        SortedGroups.runs(it)(_._1 == _._1).flatMap { run =>
+          val (doc, first) = run.next()
+          val lbl = math.min(doc, first)
+          // nbr-sorted, so a repeated edge is adjacent
+          var prev = first
+          val nbrs = Iterator.single(first) ++ run.map(_._2).filter { n =>
+            val fresh = n != prev
+            prev = n
+            fresh
+          }
+          nbrs.grouped(CcSlice).zipWithIndex.map { case (ns, i) =>
+            (doc, lbl, lbl, i == 0, ns.toArray)
+          }
+        }
+      }(ccEnc)
+
+  /** The CC loop proper: writes (doc, lbl) — the min doc of its component
+    * — for every doc with a candidate edge to the parquet store `out`,
+    * and returns each round's count of docs whose label dropped (the last
+    * is 0). Nothing is collected to the driver but the counts.
+    */
+  private[graft] def ccLabels(sig: DataFrame, out: String): Seq[Long] = {
+    var state = ccState(sig)
+    val changed = Seq.newBuilder[Long]
+    var last = 1L
+    while (last > 0) {
+      val dropped = state.sparkSession.sparkContext.longAccumulator
+      // lazy: the map stage runs here, the result stage in the count
+      val next = ccRound(state).localCheckpoint(eager = false)
+      next.foreachPartition { (rows: Iterator[CcState]) =>
+        rows.foreach { case (_, lbl, old, head, _) => if (head && lbl < old) dropped.add(1L) }
+      }
+      last = dropped.value
+      changed += last
+      releaseCheckpoint(state)
+      state = next
     }
-    // the edge table served its last join; only the final labels
-    // checkpoint (which the returned plan reads) stays resident until
-    // the ContextCleaner GCs it after the caller drops the DataFrame
-    releaseCheckpoint(sym)
-    labels
+    state.filter(col("_4")).select(col("_1").as("doc"), col("_2").as("lbl"))
+      .write.mode("overwrite").parquet(out)
+    releaseCheckpoint(state)
+    changed.result()
   }
+
+  /** One propagation round: every state row crosses the exchange by doc
+    * together with its label sent to each neighbour. A doc's messages
+    * sort before its own rows, so its new label, the min of its messages
+    * and its label, is known when its rows stream past.
+    */
+  private def ccRound(state: Dataset[CcState]): Dataset[CcState] =
+    state
+      .flatMap { case st @ (_, lbl, _, _, nbrs) =>
+        Iterator.single(st) ++ nbrs.iterator.map(n => (n, lbl, lbl, false, null: Array[Long]))
+      }(ccEnc)
+      .repartition(col("_1")).sortWithinPartitions(col("_1"), col("_5").isNotNull)
+      .mapPartitions { it =>
+        SortedGroups.runs(it)(_._1 == _._1).flatMap { run =>
+          var msg = Long.MaxValue
+          run.flatMap { case (doc, lbl, _, head, nbrs) =>
+            if (nbrs == null) { msg = math.min(msg, lbl); Iterator.empty }
+            else Iterator.single((doc, math.min(msg, lbl), lbl, head, nbrs))
+          }
+        }
+      }(ccEnc)
 
   /** The stored label table: the iterative CC assembly (the costliest
     * stage of the dedup family) runs once per `documents` stamp — the
@@ -1141,7 +1210,7 @@ object Dedup {
     */
   def labelsStored(s: SparkSession, dir: String): DataFrame = {
     val path = graft.Derived.path(s, "labels", dir, Seq("documents"))(
-      ccLabels(s, dir).write.mode("overwrite").parquet(_))
+      ccLabels(signatures(s, dir), _))
     // explicit schema: an empty corpus writes a schema-less empty store
     s.read.schema("doc BIGINT, lbl BIGINT").parquet(path)
   }

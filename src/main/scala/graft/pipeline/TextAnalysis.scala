@@ -31,7 +31,7 @@ object TextAnalysis {
       .withColumn("toks", toks)
     val withScores = markers.foldLeft(scored) { case (df, (lang, ws)) =>
       df.withColumn(s"score_$lang",
-        size(filter(col("toks"), t => ws.map(w => t === w).reduce(_ || _))).cast("long"))
+        graft.functions.CountInSet(col("toks"), new graft.functions.WordSet(ws)).cast("long"))
     }
     // argmax with lexicographic tiebreak: iterate langs in sorted order,
     // strict > keeps the earlier lang on ties
@@ -88,6 +88,9 @@ object TextAnalysis {
   private[pipeline] def ttrCol(nTypes: Column, nTokens: Column): Column =
     nTypes.cast("double") / nTokens.cast("double")
 
+  /** Every language's markers: t2's and the verdict's n_marker set. */
+  private val markerSet = new graft.functions.WordSet(markers.values.flatten.toSeq)
+
   /** `docs` plus its per-row token statistics and t2's quality score:
     * toks, n_tokens, n_marker, len_nospace, avg_token_len, marker_ratio,
     * quality. Every count is an array size or string length of the row
@@ -96,12 +99,11 @@ object TextAnalysis {
     * the same integer as the oracle's length(replace(text, ' ', '')).
     */
   private def withQuality(docs: DataFrame): DataFrame = {
-    val allMarkers = markers.values.flatten.toSeq.sorted
     docs
       .withColumn("toks", split(col("text"), " "))
       .withColumn("n_tokens", size(col("toks")).cast("long"))
-      .withColumn("n_marker", size(filter(col("toks"),
-        t => allMarkers.map(w => t === w).reduce(_ || _))).cast("long"))
+      .withColumn("n_marker",
+        graft.functions.CountInSet(col("toks"), markerSet).cast("long"))
       .withColumn("len_nospace",
         length(col("text")).cast("long") - col("n_tokens") + 1L)
       .withColumn("avg_token_len",

@@ -299,11 +299,13 @@ object Streams {
 
   // --- st7_stream_decontaminate: stream-static decontamination ------------
   /** File sources need an explicit schema; derive it from the parquet
-    * footer rather than hand-duplicating it — a drifted corpus schema
-    * must fail loudly here, not read silent all-null columns.
+    * footer ([[Tables.footerSchema]], on the driver) rather than hand-
+    * duplicating it — a drifted corpus schema must fail loudly here, not
+    * read silent all-null columns.
     */
   def readDocumentsStream(s: SparkSession, docsDir: String): DataFrame =
-    s.readStream.schema(s.read.parquet(docsDir).schema).parquet(docsDir)
+    s.readStream.schema(Tables.footerSchema(s, docsDir)
+      .getOrElse(s.read.parquet(docsDir).schema)).parquet(docsDir)
 
   /** Benchmark shingle fingerprints (docs 0-19) from the STATIC corpus —
     * the small side of the stream-static join, planned once and broadcast

@@ -75,6 +75,16 @@ class PipelineSpec extends SparkSpec {
       s"d5 recall regression: missed ${t -- got}, spurious ${got -- t}")
   }
 
+  /** d7's candidate edges (both directions, repeats kept) as the pair
+    * set: doc_a < doc_b, distinct.
+    */
+  private def candidatePairs(sig: DataFrame): DataFrame =
+    Dedup.candidateEdges(sig).toDF("doc_a", "doc_b")
+      .filter(col("doc_a") < col("doc_b")).distinct()
+
+  private def bandPairSet(sig: DataFrame): Set[(Long, Long)] =
+    candidatePairs(sig).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
   test("candidatePairs: a viral duplicate cluster emits linear star edges, stays connected") {
     // The 100 TB failure mode the cap exists for: 1000 copies of one
     // document share identical signatures, so ALL of them land in the
@@ -87,8 +97,7 @@ class PipelineSpec extends SparkSpec {
     val n = 1000
     val sig = (0 until n).map(i => (i.toLong, Seq.fill(Dedup.NumPerm)(7L)))
       .toDF("doc_id", "sigs")
-    val pairs = Dedup.candidatePairs(sig)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val pairs = bandPairSet(sig).toSeq
     assert(pairs.length == n - 1,
       s"expected ${n - 1} star edges, got ${pairs.length} (uncapped would be ${n * (n - 1) / 2})")
     assert(pairs.forall(_._1 == 0L), "star edges must anchor at the bucket min")
@@ -101,8 +110,7 @@ class PipelineSpec extends SparkSpec {
     val n = Dedup.MaxBandDf // boundary: exactly at the cap is still exact
     val sig = (0 until n).map(i => (i.toLong, Seq.fill(Dedup.NumPerm)(3L)))
       .toDF("doc_id", "sigs")
-    val pairs = Dedup.candidatePairs(sig)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val pairs = bandPairSet(sig)
     val expected = (for {
       i <- 0 until n; j <- i + 1 until n
     } yield (i.toLong, j.toLong)).toSet
@@ -211,7 +219,7 @@ class PipelineSpec extends SparkSpec {
     val full = Seq.fill(Dedup.NumPerm)(5L)
     val sig = Seq((0L, full), (1L, full), (2L, Seq.fill(len)(5L))).toDF("doc_id", "sigs")
     Seq[(String, DataFrame => DataFrame)](
-      "candidatePairs" -> Dedup.candidatePairs,
+      "candidateEdges" -> candidatePairs,
       "scoredCandidatePairs" -> Dedup.scoredCandidatePairs
     ).foreach { case (name, pairs) =>
       val msgs = failureMessages(pairs(sig).collect())

@@ -162,4 +162,43 @@ class RowLocalKernelsSpec extends SparkSpec {
     // the grouped reference merges the two rows into one verdict
     assert(ReferencePlans.t8Grouped(spark, d).filter(col("doc_id") === 1L).count() == 1)
   }
+
+  test("CountInSet equals the size(filter(...)) lambda form it replaced") {
+    // empty text, a null array, repeated markers, markers inside longer
+    // tokens and a token that differs in case only
+    val words = Seq("the", "a", "order", "data")
+    val rows = Seq(0L -> Some(""), 1L -> None, 2L -> Some("the the a the"),
+      3L -> Some("there other aorder dataset a"), 4L -> Some("The A ORDER data"),
+      5L -> Some("data  the "))
+    val df = rows.toDF("id", "text").withColumn("toks", split(col("text"), " "))
+    // built under the conf being tested: the null branch is fixed when
+    // the expression is made
+    def both(): Seq[(Long, Option[Int], Option[Int])] =
+      df.select(col("id"),
+        graft.functions.CountInSet(col("toks"), new graft.functions.WordSet(words)),
+        size(filter(col("toks"), t => words.map(w => t === w).reduce(_ || _))))
+        .collect().toSeq.map(r =>
+        (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Int]),
+          Option(r.get(2)).map(_.asInstanceOf[Int])))
+    // codegen'd and interpreted, on the default (ANSI) session and with
+    // the legacy size-of-null (-1 for a null array)
+    for ((ansi, nullCount) <- Seq("true" -> None, "false" -> Some(-1));
+         mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      val conf = Map("spark.sql.ansi.enabled" -> ansi,
+        "spark.sql.legacy.sizeOfNull" -> "true", "spark.sql.codegen.factoryMode" -> mode,
+        "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString)
+      val before = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      try {
+        conf.foreach { case (k, v) => spark.conf.set(k, v) }
+        val got = both()
+        got.foreach { case (id, n, l) => assert(n == l, s"doc $id ($ansi, $mode): $n vs lambda $l") }
+        assert(got.map(r => r._1 -> r._2).toMap ==
+          Map(0L -> Some(0), 1L -> nullCount, 2L -> Some(4), 3L -> Some(1),
+              4L -> Some(1), 5L -> Some(2)), s"ansi=$ansi $mode")
+      } finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
 }
