@@ -2,6 +2,8 @@ package graft
 
 /** Local iteration helper: time one operator at one SF without running the
   * whole bench. `runMain graft.TimeOp <name>[,<name>...] [sfDir] [runs]`.
+  * Each run's time comes with the generated classes it compiled: a run
+  * that recompiles what an earlier one already compiled shows itself.
   */
 object TimeOp {
   def main(args: Array[String]): Unit = {
@@ -17,9 +19,10 @@ object TimeOp {
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       val times = (1 to runs).map { _ =>
+        val c0 = GraftSession.codegenCompiles
         val t0 = System.nanoTime()
         val n = fn(spark, sfDir).count()
-        val dt = ((System.nanoTime() - t0) / 1e9, n)
+        val dt = ((System.nanoTime() - t0) / 1e9, n, GraftSession.codegenCompiles - c0)
         // GC barrier between runs (outside the timed window), as in
         // Bench: ContextCleaner only deletes the previous run's shuffle
         // files after its DataFrame is COLLECTED BY GC, and a tier640 d5
@@ -32,6 +35,7 @@ object TimeOp {
       }
       println(f"[timeop] $name rows=${times.head._2} " +
         times.map(t => f"${t._1}%.3f").mkString("times=[", ", ", "]") +
+        times.map(_._3).mkString(" compiles=[", ", ", "]") +
         f" min=${times.map(_._1).min}%.3f load1=${Bench.load1()}%.2f")
     }
     spark.stop()

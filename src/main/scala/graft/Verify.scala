@@ -52,6 +52,7 @@ object Verify {
     }
     if (nFailed > 0)
       System.err.println(s"[verify] $nFailed of ${SparkEntry.queries.size} queries FAILED")
+    System.err.println(s"[verify] codegen compiles: ${GraftSession.codegenCompiles}")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -24,10 +24,18 @@ object TextAnalysis {
 
   private val langs = markers.keys.toSeq.sorted
 
+  /** `docs`' `cols` sorted by `doc_id`, for a per-row kernel to run on
+    * top of. The sort goes below the kernel because a range exchange runs
+    * its child twice (once to sample the bounds, once to shuffle): a
+    * kernel projected beneath the orderBy would run twice per row.
+    */
+  private def byDocId(docs: DataFrame, cols: String*): DataFrame =
+    docs.select(cols.map(col): _*).orderBy("doc_id")
+
   // --- t1_langid ----------------------------------------------------------
   def t1Langid(s: SparkSession, dir: String): DataFrame = {
     val toks = split(col("text"), " ")
-    val scored = Tables.documents(s, dir)
+    val scored = byDocId(Tables.documents(s, dir), "doc_id", "lang", "text")
       .withColumn("toks", toks)
     val withScores = markers.foldLeft(scored) { case (df, (lang, ws)) =>
       df.withColumn(s"score_$lang",
@@ -45,7 +53,6 @@ object TextAnalysis {
     withScores
       .select(col("doc_id") +: col("lang").as("labeled_lang") +:
         pred._1.as("pred_lang") +: langs.map(l => col(s"score_$l")): _*)
-      .orderBy("doc_id")
   }
 
   val t1Sql: String = {
@@ -115,9 +122,8 @@ object TextAnalysis {
   }
 
   def t2Quality(s: SparkSession, dir: String): DataFrame =
-    withQuality(Tables.documents(s, dir))
+    withQuality(byDocId(Tables.documents(s, dir), "doc_id", "text"))
       .select("doc_id", "n_tokens", "avg_token_len", "marker_ratio", "quality")
-      .orderBy("doc_id")
 
   val t2Sql: String = {
     val allMarkers = markers.values.flatten.toSeq.sorted
@@ -139,13 +145,12 @@ object TextAnalysis {
 
   // --- t3_token_count: whitespace + BPE-ish regex tokenization ------------
   def t3TokenCount(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
+    byDocId(Tables.documents(s, dir), "doc_id", "text")
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("ws_tokens"),
         size(regexp_extract_all(col("text"), lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), lit(0)))
           .cast("long").as("bpe_tokens"),
         length(col("text")).cast("long").as("n_chars"))
-      .orderBy("doc_id")
 
   val t3Sql: String =
     """SELECT doc_id,
@@ -163,10 +168,9 @@ object TextAnalysis {
   // codegen'd call site now, same semantics (Spark's length/substring
   // and DuckDB's text[i] both count code points).
   def t4Fingerprint(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
+    byDocId(Tables.documents(s, dir), "doc_id", "text")
       .select(col("doc_id"),
         graft.functions.RollingFingerprint(col("text")).as("fingerprint"))
-      .orderBy("doc_id")
 
   val t4Sql: String =
     """SELECT doc_id,
@@ -353,16 +357,14 @@ object TextAnalysis {
   /** The verdict over the corpus, one row per document with text: a
     * null-text doc has no tokens to judge (its t6/t7 legs are empty), so
     * it gets no row. Plan: scan → the orderBy's one exchange → project.
-    * The sort goes first because a range exchange runs its child twice
-    * (once to sample the bounds, once to shuffle): sorting the scanned
-    * (doc_id, text) rows runs the verdict kernel once per document
-    * instead of twice, at the price of an exchange that carries the text
-    * instead of the verdict row (seed-1 curation corpus, `local[2]`
-    * pinned to 2 CPUs: 1,058 → 807 ms median per t8).
+    * Sorting the scanned rows first ([[byDocId]]) runs the verdict kernel
+    * once per document instead of twice, at the price of an exchange that
+    * carries the text instead of the verdict row (seed-1 curation corpus,
+    * `local[2]` pinned to 2 CPUs: 1,058 → 807 ms median per t8).
     */
   def t8QualityFilter(s: SparkSession, dir: String): DataFrame =
-    qualityVerdicts(Tables.documents(s, dir).filter(col("text").isNotNull)
-        .select("doc_id", "text").orderBy("doc_id"))
+    qualityVerdicts(byDocId(Tables.documents(s, dir).filter(col("text").isNotNull),
+        "doc_id", "text"))
       .select("doc_id", "quality", "ttr", "dup_bigram_frac", "keep", "reject_reason")
 
   val t8Sql: String =

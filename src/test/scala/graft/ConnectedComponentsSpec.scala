@@ -193,16 +193,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     * graph's line against the simulation.
     */
   private def checkRetried(hook: String, names: Seq[String]): Unit = {
-    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
-    val opts = (0 until jvm.size).map(jvm.get).filterNot(_.startsWith("-Xmx")) :+ "-Xmx1g"
-    val cmd = (s"${System.getProperty("java.home")}/bin/java" +: opts) ++
-      Seq("-cp", System.getProperty("java.class.path"), CcRetryMain.getClass.getName.stripSuffix("$"), hook) ++
-      names
-    val err = java.io.File.createTempFile("graft-cc-retry", ".log")
-    val p = new ProcessBuilder(cmd: _*).redirectError(err).start()
-    val lines = scala.io.Source.fromInputStream(p.getInputStream).getLines().toList
-    val code = p.waitFor()
-    def tail = scala.io.Source.fromFile(err).getLines().toList.takeRight(30).mkString("\n")
+    val (code, lines, tail) = ChildJvm.run(CcRetryMain, hook +: names)
     assert(code == 0, s"$hook retry run exited $code:\n$tail")
     val got = lines.map(_.split(" ", 2)).collect { case Array(n, rest) => n -> rest }.toMap
     names.foreach { name =>

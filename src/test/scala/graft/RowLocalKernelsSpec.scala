@@ -163,6 +163,21 @@ class RowLocalKernelsSpec extends SparkSpec {
     assert(ReferencePlans.t8Grouped(spark, d).filter(col("doc_id") === 1L).count() == 1)
   }
 
+  test("t1-t4 and t8 sort the scanned columns before their per-row kernel") {
+    // a range exchange runs its child twice (bounds sample, then shuffle),
+    // so anything computed beneath the sort is computed twice per row
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
+    for (op <- Seq("t1_langid", "t2_quality_score", "t3_token_count", "t4_fingerprint",
+                   "t8_quality_filter")) {
+      val plan = SparkEntry.queries(op)(spark, sf).queryExecution.optimizedPlan
+      val sorts = plan.collect { case s: Sort => s }
+      assert(sorts.size == 1, s"$op: expected one sort\n$plan")
+      val beneath = sorts.head.child.collect { case p: Project => p.projectList }.flatten
+      assert(beneath.forall(_.isInstanceOf[Attribute]), s"$op computes beneath its sort:\n$plan")
+    }
+  }
+
   test("CountInSet equals the size(filter(...)) lambda form it replaced") {
     // empty text, a null array, repeated markers, markers inside longer
     // tokens and a token that differs in case only
