@@ -260,6 +260,10 @@ object Bench {
     // a neighbor op's ContextCleaner backlog from billing this op. ALL
     // raw times are published so a persistent-vs-transient slowdown is
     // distinguishable in the artifact.
+    // A run is a `count()`, under which the optimizer prunes an op's
+    // computed columns and final sort (`TimeOp` writes every column to the
+    // `noop` format instead); it stays until the measurement spine of
+    // ROADMAP direction 3 replaces this bench.
     val Runs = 4
     def measure(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
                 dir: String): (Seq[Double], Boolean) = {

@@ -6,6 +6,15 @@ import org.apache.spark.sql.SparkSession
 /** Opinionated session entry point: the configuration graft expects on a
   * real cluster, with the 100 TB rationale for each knob. Local runs
   * (Verify/Bench/tests) override master and shuffle partitions.
+  *
+  * Generated code is compiled once per plan shape: the codegen cache
+  * ([[CodegenCacheEntries]]) holds graft's working set, and
+  * `GraftExtensions` passes the bounds and payloads of cell-store requests
+  * (Deker slice reads, patches, placements) to their generated classes as
+  * bound parameters ([[graft.plans.BoundParams]]), so a warm request with
+  * new values compiles nothing. That rule is scoped to plans that scan the
+  * cell store, because only they change their literals on every request;
+  * other plans repeat theirs and already hit the cache.
   */
 object GraftSession {
 

@@ -1,9 +1,15 @@
 package graft
 
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.functions.{count, lit}
+
 /** Local iteration helper: time one operator at one SF without running the
   * whole bench. `runMain graft.TimeOp <name>[,<name>...] [sfDir] [runs]`.
   * Each run's time comes with the generated classes it compiled: a run
   * that recompiles what an earlier one already compiled shows itself.
+  * A run is a `noop`-format write of every output column, so the timed
+  * plan computes all the op's columns and keeps its final sort; a
+  * `count()` would let the optimizer prune both away.
   */
 object TimeOp {
   def main(args: Array[String]): Unit = {
@@ -19,10 +25,12 @@ object TimeOp {
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       val times = (1 to runs).map { _ =>
+        val rows = Observation("rows")
         val c0 = GraftSession.codegenCompiles
         val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
-        val dt = ((System.nanoTime() - t0) / 1e9, n, GraftSession.codegenCompiles - c0)
+        fn(spark, sfDir).observe(rows, count(lit(1)).as("n"))
+          .write.format("noop").mode("overwrite").save()
+        val dt = ((System.nanoTime() - t0) / 1e9, rows.get("n"), GraftSession.codegenCompiles - c0)
         // GC barrier between runs (outside the timed window), as in
         // Bench: ContextCleaner only deletes the previous run's shuffle
         // files after its DataFrame is COLLECTED BY GC, and a tier640 d5

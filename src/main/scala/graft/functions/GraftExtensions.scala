@@ -1,10 +1,12 @@
 package graft.functions
 
 import graft.arrays.HashRing
-import graft.plans.{RingLookup, RingReplicas, RingTable}
+import graft.plans.{BoundParams, RingLookup, RingReplicas, RingTable}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 /** SparkSessionExtensions registrar: exposes graft's native expressions to
   * SQL users. Activate with
@@ -18,6 +20,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * This is the preference-order-(c) integration path from SURVEY §2:
   * whole-session extension points rather than per-DataFrame helpers.
+  *
+  * It also injects [[graft.plans.BoundParams]], which takes the bounds and
+  * payload values of a cell-store request out of its generated code, so a
+  * Deker slice read, patch or placement compiles once per plan shape, not
+  * once per request. The rule is scoped to plans that scan the cell store:
+  * other plans repeat their literals from run to run and already hit the
+  * codegen cache, so rewriting them would change their code for nothing.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -68,5 +77,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         val (bloom, h) = pair("graft_bloom_might_contain")(args)
         BloomMightContain(bloom, h)
       }))
+    e.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = BoundParams
+    })
   }
 }
